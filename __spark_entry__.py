@@ -124,8 +124,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_type_stats": _q.events_type_stats,
         "tpch_pricing_summary": _q.tpch_pricing_summary,
         "tpch_top_customers": _q.tpch_top_customers,
-        "dedup_simhash_drops": _q.dedup_simhash_drops,
-        "dedup_winnow_fp_drops": _q.dedup_winnow_fp_drops,
         "er_threshold_best": _q.er_threshold_best,
         "ann_ivf_disambiguation_acc": _q.ann_ivf_disambiguation_acc,
         "ann_ivf_mrr": _q.ann_ivf_mrr,

@@ -189,6 +189,27 @@ def weight_tokens_packed(
     return df.drop(token_col).join(tw.hint("merge"), id_col)
 
 
+def vocab_index(vocab, tokens):
+    """Positions of `tokens` in the sorted `vocab` array. Every token is in
+    the vocabulary by construction (dfreq is aggregated over the very frame
+    being weighted); should that break, e.g. on an input that re-evaluates
+    differently, raise rather than let searchsorted hand an unseen token its
+    neighbour's weight."""
+    import numpy as np
+
+    idx = np.searchsorted(vocab, tokens)
+    hit = idx < len(vocab)
+    hit[hit] = vocab[idx[hit]] == tokens[hit]
+    if not hit.all():
+        missing = np.unique(tokens[~hit])
+        raise RuntimeError(
+            f"IDF broadcast kernel: {len(missing)} token(s) not in the "
+            f"broadcast vocabulary (first: {missing[:5].tolist()}); the input "
+            "changed between the vocabulary collect and the weighting pass"
+        )
+    return idx
+
+
 def _weight_tokens_packed_broadcast(
     df: DataFrame, id_col: str, token_col: str, ws_col: str
 ) -> DataFrame | None:
@@ -241,7 +262,10 @@ def _weight_tokens_packed_broadcast(
     packed_vocab = vocab * 64 + weights
     bc = df.sparkSession.sparkContext.broadcast((vocab, packed_vocab, weights))
 
-    cols = [c for c in df.columns if c != token_col]
+    # the legacy join's column order (join key first, then the other input
+    # columns, then the weighted pair), so the schema never depends on which
+    # branch of the gate ran
+    cols = [id_col] + [c for c in df.columns if c not in (id_col, token_col)]
     out_schema = df.select(
         *cols,
         F.expr("array(cast(0 as long))").alias(token_col),
@@ -279,9 +303,7 @@ def _weight_tokens_packed_broadcast(
                 ws = np.zeros(len(b), dtype=np.int64)
             else:
                 flat = np.concatenate(arrs)
-                idx = np.searchsorted(v, flat)
-                # every token of every document is in the vocabulary by
-                # construction (dfreq is aggregated over this very frame)
+                idx = vocab_index(v, flat)
                 flat_packed = pv[idx]
                 flat_w = w[idx]
                 # ascending sort within each row == array_sort (packing is

@@ -3,6 +3,11 @@
 Local-mode testing uses ``local[$SPARK_GRAFT_CPUS]``; on a real cluster the
 same builder is driven by spark-submit conf. AQE is on (skew-join splitting is
 the backstop behind our explicit salting, SURVEY.md section 4).
+
+Local defaults are sized from the machine the session starts on: the core
+count from ``os.cpu_count()`` and the driver heap from the physical memory
+(``$SPARK_GRAFT_CPUS`` and ``$BELA_SPARK_DRIVER_MEM`` override them). A fixed
+heap larger than the box gets the driver JVM OOM-killed mid-run.
 """
 
 from __future__ import annotations
@@ -10,6 +15,43 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# local-mode driver heap: this share of physical memory, within these bounds
+# (the rest is left to the Python workers, the page cache and the OS)
+DRIVER_MEM_SHARE = 0.5
+DRIVER_MEM_MIN_MB = 1024
+DRIVER_MEM_MAX_MB = 24 * 1024
+
+# generated-class cache entries (spark.sql.codegen.cache.maxEntries, stock
+# 100). One run_linkage pass or one ingest micro-batch generates ~170
+# distinct classes; a cache smaller than that evicts a job's classes before
+# the job runs again, so every repeat recompiles them in Janino and runs the
+# fresh classes interpreted until the JIT catches up (~1 s of a 4-5 s
+# micro-batch, and uneven times across repeated micro-batches). Sized to
+# hold several job shapes at once.
+CODEGEN_CACHE_ENTRIES = 1024
+
+
+def default_cpus() -> int:
+    """Local core count: ``$SPARK_GRAFT_CPUS``, else the machine's cores."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``$BELA_SPARK_DRIVER_MEM``, else DRIVER_MEM_SHARE of the meminfo
+    file's MemTotal within the bounds above (the lower bound when there is
+    no such file)."""
+    override = os.environ.get("BELA_SPARK_DRIVER_MEM")
+    if override:
+        return override
+    mb = DRIVER_MEM_MIN_MB
+    try:
+        with open(meminfo) as f:
+            total_kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+        mb = int(total_kb / 1024 * DRIVER_MEM_SHARE)
+    except (OSError, StopIteration):
+        pass
+    return f"{min(DRIVER_MEM_MAX_MB, max(DRIVER_MEM_MIN_MB, mb))}m"
 
 
 def get_spark(
@@ -24,10 +66,10 @@ def get_spark(
     ``shuffle_partitions`` defaults to the local core count; on a cluster it
     should be ~2-3x total executor cores (set via spark-submit --conf).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     master = master or os.environ.get("BELA_SPARK_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
-        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else cpus
+        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else str(cpus)
         shuffle_partitions = 32 if n == "*" else max(8, int(n))
 
     builder = (
@@ -40,10 +82,11 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_size))
-        .config("spark.driver.memory", os.environ.get("BELA_SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # NOTE on spark.cleaner.periodicGC.interval (left at the stock 30min
         # here, deliberately): the ContextCleaner frees shuffle files and
         # dropped checkpoint blocks only after a JVM GC notices the dead

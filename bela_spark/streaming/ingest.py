@@ -6,11 +6,20 @@ Spark extension, not a ported operator: new records arrive as files in a
 directory (stand-in for a Kafka/Iceberg CDC feed), and each micro-batch is
 linked against the ACCUMULATED record state via foreachBatch:
 
-  micro-batch -> normalize/sha -> blocking keys
-             -> pairs vs (batch ∪ existing-state) keys
-             -> score -> accepted edges appended to the edge log
-             -> connected components re-run over the full edge log
-             -> cluster table overwritten (checkpointed parquet)
+  micro-batch -> normalize/sha -> batch-first merge into the record state
+             -> blocking keys for the batch's rows only; every other rid
+                reuses its stored keys
+             -> touched keys (those holding a batch rid) joined to slim
+                features, materialized once
+             -> pairs within touched keys -> score -> accepted edges
+             -> edge log minus edges of content-changed rids, plus new edges
+             -> connected components over the touched components only
+             -> records/, keys/, edges/, clusters/ overwritten (parquet)
+
+Stored keys are derived state, valid only for the key parameters they were
+built with (KEY_PARAMS, recorded on every key row). A state with no keys/
+table, or keys built under other parameters, reads as an empty stored-key
+set, so every record is re-keyed on the same path.
 
 No watermark: content keys are not temporal. Clustering is INCREMENTAL: CC
 re-runs only over components touched by the batch's new edges (stored edges
@@ -34,13 +43,25 @@ from bela_spark.operators.scoring import fused_block_and_score
 from bela_spark.pipeline import prepare_records
 
 
+# the LinkageConfig fields blocking_keys reads: stored keys built under any
+# other values of these are stale and are rebuilt
+KEY_PARAMS = ("prefix_len", "shingle_k", "num_minhashes", "band_size")
+
+
+def key_params(cfg: LinkageConfig) -> str:
+    """The key parameters of `cfg` as one string, stored on every key row."""
+    return ",".join(f"{p}={getattr(cfg, p)}" for p in KEY_PARAMS)
+
+
 class IncrementalLinkage:
-    """foreachBatch driver state: parquet-backed record/edge/cluster tables."""
+    """foreachBatch driver state: parquet-backed record/key/edge/cluster
+    tables."""
 
     def __init__(self, state_dir: str, cfg: LinkageConfig | None = None):
         self.state_dir = state_dir
         self.cfg = cfg or LinkageConfig()
         self.records_dir = os.path.join(state_dir, "records")
+        self.keys_dir = os.path.join(state_dir, "keys")
         self.edges_dir = os.path.join(state_dir, "edges")
         self.clusters_dir = os.path.join(state_dir, "clusters")
 
@@ -76,20 +97,25 @@ class IncrementalLinkage:
         # must resolve deterministically — content_sha is the only column
         # that can differ within a rid (rid = sha256(repo||path||commit))
         prio = W.partitionBy("rid").orderBy("_prio", "content_sha")
-        all_records = (
+        resolved = (
             new_records.withColumn("_prio", F.lit(0))
             .unionByName(existing.withColumn("_prio", F.lit(1)))
             .withColumn("_rn", F.row_number().over(prio))
             .filter(F.col("_rn") == 1)
-            .drop("_prio", "_rn")
+            .drop("_rn")
             .localCheckpoint()
         )
+        all_records = resolved.drop("_prio")
+        # the batch's rows after resolution, read from the cut above rather
+        # than by re-running the batch's normalize stage
+        batch_rows = resolved.filter(F.col("_prio") == 0)
+        new_ids = batch_rows.select("rid")
 
         # rids whose content CHANGED in this batch: every stored edge incident
         # to them was derived from the old content and is now invalid — a
         # cluster must never outlive the evidence it was built on
         changed = (
-            new_records.select("rid", "content_sha")
+            batch_rows.select("rid", "content_sha")
             .join(
                 existing.select("rid", F.col("content_sha").alias("_old_sha")), "rid"
             )
@@ -98,10 +124,25 @@ class IncrementalLinkage:
             .localCheckpoint()
         )
 
-        # dedup=False: (rid, key) unique by construction (see blocking_keys)
-        # — saves one distinct exchange per micro-batch
-        keys = blocking_keys(all_records, cfg, dedup=False)
-        new_ids = new_records.select("rid").distinct()
+        # stored keys stand for every rid the batch did not re-send (its
+        # content is unchanged) when they were built under this config's key
+        # parameters; key-gen runs only on the records left without any —
+        # the batch's rows, plus the whole state when keys/ is missing or
+        # stale. dedup=False: (rid, key) unique by construction (see
+        # blocking_keys). The union is cut before keys_dir is overwritten.
+        params = key_params(cfg)
+        stored_keys = (
+            self._existing(
+                spark, self.keys_dir, "rid string, key string, key_params string"
+            )
+            .filter(F.col("key_params") == params)
+            .join(new_ids, "rid", "left_anti")
+            .select("rid", "key")
+        )
+        unkeyed = all_records.join(stored_keys.select("rid"), "rid", "left_anti")
+        keys = stored_keys.unionByName(
+            blocking_keys(unkeyed, cfg, dedup=False)
+        ).localCheckpoint()
         # bound work to keys touched by this batch: only keys containing a new
         # record can produce new pairs
         touched = keys.join(new_ids, "rid", "left_semi").select("key").distinct()
@@ -109,7 +150,8 @@ class IncrementalLinkage:
         # slim the pair-stage payload before it is multiplied by the key
         # fan-out (guide §2.3): the scorer only ever reads the first
         # lev_max_chars of norm (substring is idempotent, so scores are
-        # bit-identical), and the full norm already lives in the state table
+        # bit-identical), and the full norm already lives in the state table.
+        # Cut once: the scorer's tier branches and key counts all read it
         kwf = keys_touched.join(
             all_records.select(
                 "rid",
@@ -117,7 +159,7 @@ class IncrementalLinkage:
                 F.array_distinct("tokens").alias("tokens"),
             ),
             "rid",
-        )
+        ).localCheckpoint()
         scored_by_key, _ = fused_block_and_score(kwf, cfg, persist=False)
         # checkpoint: new_edges feeds the edge log, the incremental-CC touched
         # set AND the cluster table — without this the fused scoring DAG (the
@@ -151,6 +193,9 @@ class IncrementalLinkage:
 
         # persist state (all inputs are checkpointed, so overwrites are safe)
         all_records.write.mode("overwrite").parquet(self.records_dir)
+        keys.withColumn("key_params", F.lit(params)).write.mode("overwrite").parquet(
+            self.keys_dir
+        )
         all_edges.write.mode("overwrite").parquet(self.edges_dir)
         clusters.localCheckpoint().write.mode("overwrite").parquet(self.clusters_dir)
 

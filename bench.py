@@ -22,7 +22,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
     n_linkage = int(os.environ.get("BELA_BENCH_ROWS", str(int(6_000_000 * sf))))
 
@@ -30,7 +29,9 @@ def main() -> None:
     from bela_spark.config import LinkageConfig
     from bela_spark.fixtures import synth_repo_files
     from bela_spark.pipeline import run_linkage
-    from bela_spark.session import get_spark
+    from bela_spark.session import default_cpus, get_spark
+
+    cpus = default_cpus()
 
     spark = get_spark(
         app_name="bela-bench",

@@ -27,7 +27,6 @@ def noop(df) -> None:
 def main() -> None:
     which = sys.argv[1] if len(sys.argv) > 1 else "all"
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
     n_linkage = int(os.environ.get("BELA_BENCH_ROWS", str(int(6_000_000 * sf))))
 
@@ -41,7 +40,9 @@ def main() -> None:
         pair_stage_features,
         prepare_records,
     )
-    from bela_spark.session import get_spark
+    from bela_spark.session import default_cpus, get_spark
+
+    cpus = default_cpus()
 
     spark = get_spark(
         app_name="bela-bench-extra",

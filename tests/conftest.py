@@ -1,6 +1,6 @@
 import pytest
 
-from bela_spark.session import get_spark
+from bela_spark.session import default_cpus, get_spark
 
 
 def executed_plan(df) -> str:
@@ -10,6 +10,8 @@ def executed_plan(df) -> str:
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="bela-spark-tests", master="local[8]", shuffle_partitions=8)
+    s = get_spark(
+        app_name="bela-spark-tests", master=f"local[{default_cpus()}]", shuffle_partitions=8
+    )
     yield s
     s.stop()

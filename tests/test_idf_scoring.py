@@ -258,3 +258,37 @@ def test_packed_broadcast_fast_path_gates_on_vocab_bound(spark):
         for r in idf.weight_tokens_packed(df, "rid", "tokens").collect()
     }
     assert got == ref
+
+
+def test_broadcast_vocab_lookup_fails_loud_on_unseen_token():
+    """searchsorted alone would hand an unseen token its neighbour's slot
+    (6 -> 7's, 8 -> one past the end); the kernel's lookup must raise."""
+    import numpy as np
+
+    from bela_spark.operators.idf import vocab_index
+
+    vocab = np.array([3, 5, 7], dtype=np.int64)
+    assert vocab_index(vocab, np.array([7, 3, 5, 3], dtype=np.int64)).tolist() == [2, 0, 1, 0]
+    for unseen in ([5, 6], [8], [1, 3]):
+        with pytest.raises(RuntimeError, match="not in the broadcast vocabulary"):
+            vocab_index(vocab, np.array(unseen, dtype=np.int64))
+    with pytest.raises(RuntimeError):
+        vocab_index(np.empty(0, dtype=np.int64), np.array([1], dtype=np.int64))
+
+
+def test_packed_broadcast_fast_path_schema_matches_legacy(spark, monkeypatch):
+    """The output schema must not depend on which gate branch ran: with the
+    id column NOT first, both paths emit (id, other columns, tokens, ws)."""
+    from bela_spark.operators import idf
+
+    df = spark.createDataFrame(
+        [("a", "r1", [1, 2], 7), ("b", "r2", [2], 8)],
+        "norm string, rid string, tokens array<int>, n int",
+    )
+    fast = idf.weight_tokens_packed(df, "rid", "tokens")
+    assert "MapInPandas" in fast._jdf.queryExecution().executedPlan().toString()
+    monkeypatch.setattr(idf, "IDF_BROADCAST_MAX_TOKENS", 0)
+    legacy = idf.weight_tokens_packed(df, "rid", "tokens")
+    assert legacy.columns == ["rid", "norm", "n", "tokens", "ws"]
+    assert fast.dtypes == legacy.dtypes
+    assert sorted(map(tuple, fast.collect())) == sorted(map(tuple, legacy.collect()))

@@ -11,6 +11,13 @@ from bela_spark.pipeline import run_linkage
 from bela_spark.streaming.ingest import IncrementalLinkage
 
 
+def _partitions(cl):
+    by = {}
+    for r in cl.select("rid", "cluster_id").collect():
+        by.setdefault(r["cluster_id"], set()).add(r["rid"])
+    return {frozenset(v) for v in by.values()}
+
+
 def test_incremental_cc_merges_components(spark, tmp_path):
     """_incremental_cc must equal a full CC re-run when a batch edge MERGES
     two previously-separate components, leaves another untouched, and links
@@ -100,14 +107,7 @@ def test_incremental_matches_batch(spark, tmp_path):
 
     batch = run_linkage(df, cfg, persist=False)
 
-    def partitions(cl):
-        rows = cl.select("rid", "cluster_id").collect()
-        by = {}
-        for r in rows:
-            by.setdefault(r["cluster_id"], set()).add(r["rid"])
-        return {frozenset(v) for v in by.values()}
-
-    assert partitions(streamed) == partitions(batch.clusters)
+    assert _partitions(streamed) == _partitions(batch.clusters)
     df.unpersist()
 
 
@@ -138,11 +138,117 @@ def test_stream_source_face_end_to_end(spark, tmp_path):
     streamed = spark.read.parquet(str(tmp_path / "state" / "clusters"))
     batch = run_linkage(df, cfg, persist=False)
 
-    def partitions(cl):
-        by = {}
-        for r in cl.select("rid", "cluster_id").collect():
-            by.setdefault(r["cluster_id"], set()).add(r["rid"])
-        return {frozenset(v) for v in by.values()}
-
-    assert partitions(streamed) == partitions(batch.clusters)
+    assert _partitions(streamed) == _partitions(batch.clusters)
     df.unpersist()
+
+
+def _count_keyed_rows(monkeypatch):
+    """Wrap ingest.blocking_keys; returns the list of row counts it keyed."""
+    from bela_spark.streaming import ingest
+
+    keyed, real = [], ingest.blocking_keys
+
+    def counting(records, cfg, *args, **kwargs):
+        keyed.append(records.count())
+        return real(records, cfg, *args, **kwargs)
+
+    monkeypatch.setattr(ingest, "blocking_keys", counting)
+    return keyed
+
+
+def _two_batches(spark, n=120, seed=11):
+    from pyspark.sql import functions as F
+
+    df = synth_repo_files(spark, n, seed=seed).select(
+        "repo", "path", "commit", "lang", "content"
+    ).localCheckpoint()
+    bucket = F.pmod(F.xxhash64("repo", "path", "commit"), F.lit(4))
+    return df, df.filter(bucket != 0), df.filter(bucket == 0)
+
+
+@pytest.mark.slow
+def test_second_batch_keys_only_its_rows(spark, tmp_path, monkeypatch):
+    """With keys/ in the state, key-gen sees the micro-batch's rows, not the
+    accumulated state — and the clusters still equal one batch run."""
+    keyed = _count_keyed_rows(monkeypatch)
+    df, first, second = _two_batches(spark)
+    inc = IncrementalLinkage(str(tmp_path / "state"))
+    inc.process_batch(first, 0)
+    inc.process_batch(second, 1)
+    assert keyed == [first.count(), second.count()]
+    assert 0 < keyed[1] < keyed[0]
+    streamed = spark.read.parquet(inc.clusters_dir)
+    assert _partitions(streamed) == _partitions(run_linkage(df, LinkageConfig()).clusters)
+
+
+@pytest.mark.slow
+def test_resent_rid_is_rekeyed_from_new_content(spark, tmp_path, monkeypatch):
+    """A re-sent rid with changed content gets the keys of its NEW content;
+    the untouched stored rid keeps its stored keys without being re-keyed."""
+    from bela_spark.operators.blocking import blocking_keys
+    from bela_spark.pipeline import prepare_records
+
+    cols = ["repo", "path", "commit", "lang", "content"]
+    old = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    new = "completely unrelated zebra xylophone quantum harbor violet"
+    inc = IncrementalLinkage(str(tmp_path / "state"))
+    inc.process_batch(
+        spark.createDataFrame(
+            [("r", "a.py", "c1", "py", old), ("r", "b.py", "c1", "py", old)], cols
+        ),
+        0,
+    )
+    keyed = _count_keyed_rows(monkeypatch)
+    resent = spark.createDataFrame([("r", "a.py", "c1", "py", new)], cols)
+    inc.process_batch(resent, 1)
+    assert keyed == [1]
+
+    def keys_of(frame):
+        return {(r["rid"], r["key"]) for r in frame.select("rid", "key").collect()}
+
+    rid_a = prepare_records(resent, inc.cfg).first()["rid"]
+    stored = keys_of(spark.read.parquet(inc.keys_dir))
+    want_a = keys_of(blocking_keys(prepare_records(resent, inc.cfg), inc.cfg))
+    assert {k for k in stored if k[0] == rid_a} == want_a
+    old_keys = keys_of(
+        blocking_keys(
+            prepare_records(spark.createDataFrame([("r", "b.py", "c1", "py", old)], cols), inc.cfg),
+            inc.cfg,
+        )
+    )
+    assert {k for k in stored if k[0] != rid_a} == old_keys
+    cl = spark.read.parquet(inc.clusters_dir)
+    assert cl.select("cluster_id").distinct().count() == 2
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize("state_keys", ["missing", "stale"])
+def test_state_without_valid_keys_is_rekeyed(spark, tmp_path, monkeypatch, state_keys):
+    """A state without keys/, or with keys built under another num_minhashes,
+    re-keys every record on the next batch; clusters still equal one batch
+    run over the union."""
+    import shutil
+
+    from bela_spark.operators.blocking import blocking_keys
+    from bela_spark.streaming.ingest import key_params
+    from pyspark.sql import functions as F
+
+    df, first, second = _two_batches(spark)
+    inc = IncrementalLinkage(str(tmp_path / "state"))
+    inc.process_batch(first, 0)
+    if state_keys == "missing":
+        shutil.rmtree(inc.keys_dir)
+    else:
+        other = LinkageConfig(num_minhashes=8)
+        records = spark.read.parquet(inc.records_dir).localCheckpoint()
+        blocking_keys(records, other, dedup=False).withColumn(
+            "key_params", F.lit(key_params(other))
+        ).write.mode("overwrite").parquet(inc.keys_dir)
+    keyed = _count_keyed_rows(monkeypatch)
+    inc.process_batch(second, 1)
+    assert keyed == [df.count()]
+    streamed = spark.read.parquet(inc.clusters_dir)
+    assert _partitions(streamed) == _partitions(run_linkage(df, LinkageConfig()).clusters)
+    # the rewritten keys/ carries this config's parameters again
+    params = {r[0] for r in spark.read.parquet(inc.keys_dir).select("key_params").distinct().collect()}
+    assert params == {key_params(inc.cfg)}
