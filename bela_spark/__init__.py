@@ -9,7 +9,7 @@ source-code repositories (``repo_files(repo, path, commit, lang, content)``):
 
   blocking (MinHash-LSH + token-prefix keys)   ~ BELA's FAISS candidate bound
   salted candidate-pair equi-join              ~ batched top-k retrieval (J1/J3)
-  Arrow-batched pairwise scoring               ~ EL classification head (E6/E8)
+  pairwise scoring inside the key join         ~ EL classification head (E6/E8)
   threshold + transitive clustering (CC)       ~ entity-id assignment
   micro pairwise P/R/F1                        ~ bela/evaluation/model_eval.py
 

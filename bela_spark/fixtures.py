@@ -46,7 +46,7 @@ def _pick(seq, *key):
     return seq[_h(*key) % len(seq)]
 
 
-@lru_cache(maxsize=65536)
+@lru_cache(maxsize=1024)
 def _group_lang(gid: int, seed: int) -> str:
     # Zipf-skewed: py hot (FIXTURES.md), exercises per-lang hot keys
     r = _h(seed, "lang", gid) % 100
@@ -61,7 +61,7 @@ def _group_lang(gid: int, seed: int) -> str:
     return "go"
 
 
-@lru_cache(maxsize=65536)
+@lru_cache(maxsize=1024)
 def _base_content(gid: int, seed: int) -> str:
     # pure function of (gid, seed): memoized because the heavy-group segment
     # re-derives the same 5 base files for ~10% of all rows (measured 4.4x on

@@ -6,13 +6,11 @@ deterministic feature-hashing embedding: the reference's trained XLM-R encoder
 hardware, so the *operator* (batch text -> vector) is preserved while the
 kernel is a seeded hashed-n-gram projection (SURVEY.md section 7 risk 1).
 
-E5/E6 (dot products) have two implementations:
-  - `dot_product`/`cosine_sim`: zip_with + aggregate, JVM-side, sequential
-    accumulation — bit-identical to DuckDB's list_inner_product, used where a
-    SQL oracle cross-checks values.
-  - batched numpy matmul inside applyInPandas (operators/scoring.py) — the
-    throughput path, mirroring the reference's batch matmul
-    (mblink/task/blink_task.py:191-193).
+E5/E6 (dot products): `dot_product`/`cosine_sim` are zip_with + aggregate,
+JVM-side, sequential accumulation — bit-identical to DuckDB's
+list_inner_product, so a SQL oracle can cross-check values. The pair scorer
+(operators/scoring.py) uses them inside the key join; the brute-force top-k
+kernel (operators/ann.py) replays the same fold in numpy.
 """
 
 from __future__ import annotations
@@ -98,10 +96,3 @@ def embed_text(dim: int = 64, seed: int = 42):
         return pd.Series(list(arr))
 
     return _embed
-
-
-def np_cosine_matrix(m: np.ndarray, e: np.ndarray) -> np.ndarray:
-    """Batched all-pairs cosine, the E6 kernel (one matmul per group/batch)."""
-    mn = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-    en = e / np.maximum(np.linalg.norm(e, axis=1, keepdims=True), 1e-12)
-    return mn @ en.T

@@ -15,10 +15,19 @@ mblink/task/blink_task.py:329-338.
 from __future__ import annotations
 
 import hashlib
+import logging
 
 from pyspark.sql import DataFrame, Window as W, functions as F
 
 from bela_spark.functions.vectors import dot_product
+
+log = logging.getLogger(__name__)
+
+# Catalogue rows brute_force_topk may collect to the driver for its numpy
+# kernel. The collect holds every embedding as Python floats (~2 KB a row at
+# 64 dims) before the numpy copy; above this bound the catalogue stays on
+# the executors and the top-k runs as the unbroadcast crossJoin plan.
+BROADCAST_CATALOG_MAX_ROWS = 100_000
 
 
 def brute_force_topk(
@@ -52,7 +61,21 @@ def brute_force_topk(
     mostly single-task CPU; the kernel runs in ~1s. Ragged/null embeddings
     (possible for ad-hoc inputs, never for the driver tables) fall back to
     the legacy plan, whose zip_with null-padding semantics they rely on.
+    A catalogue above BROADCAST_CATALOG_MAX_ROWS (counted through a bounded
+    limit before any collect) is never collected or broadcast: a warning
+    names the count and the bound, and the crossJoin plan runs without the
+    broadcast hint.
     """
+    if broadcast_catalog:
+        n_cat = catalog.limit(BROADCAST_CATALOG_MAX_ROWS + 1).count()
+        if n_cat > BROADCAST_CATALOG_MAX_ROWS:
+            log.warning(
+                "brute_force_topk: catalogue has %d+ rows, above "
+                "BROADCAST_CATALOG_MAX_ROWS=%d; running the unbroadcast "
+                "crossJoin plan instead of collecting it to the driver",
+                n_cat, BROADCAST_CATALOG_MAX_ROWS,
+            )
+            broadcast_catalog = False
     if broadcast_catalog:
         cat_rows = sorted(
             catalog.select(F.col(id_col), F.col(emb_col)).collect(),
@@ -211,25 +234,6 @@ def lsh_bucket_keys(
 
         out = cap_ids_per_key(out, bucket_cap, key_col="key", id_col=id_col)
     return out
-
-
-def lsh_bucket_drops(
-    embedded: DataFrame,
-    n_planes: int = 8,
-    n_tables: int = 4,
-    dim: int = 64,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    bucket_cap: int = 64,
-) -> DataFrame:
-    """(key, n_ids, n_dropped) for every bucket truncated by bucket_cap — the
-    never-silent-truncation companion of lsh_bucket_keys (same contract as
-    pairs.cap_keys: bounded fan-out is a feature, silent truncation is not)."""
-    from bela_spark.operators.pairs import key_drop_log
-
-    keys = lsh_bucket_keys(embedded, n_planes, n_tables, dim, seed, id_col, emb_col)
-    return key_drop_log(keys, bucket_cap, key_col="key")
 
 
 def lsh_topk(

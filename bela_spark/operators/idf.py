@@ -354,44 +354,6 @@ def weighted_jaccard_cols(
     return size_bound, wjac
 
 
-def weighted_jaccard_packed_staged(
-    t1: str = "t1", t2: str = "t2", s1: str = "s1", s2: str = "s2", wi: str = "_wi"
-):
-    """(size_bound, wi_expr, wjac_expr): the packed kernel split across TWO
-    projection stages so the intersection weight is computed ONCE per pair.
-
-    weighted_jaccard_packed_cols folds the intersection aggregate into a
-    single CASE expression; the weight sum then appears in the zero-union
-    test, the numerator AND the denominator, and because the HOF aggregate is
-    CodegenFallback the whole projection drops out of whole-stage codegen and
-    each occurrence is interpreted separately — the executed plan shows
-    aggregate(array_intersect(t1,t2), ..) THREE times, i.e. 3x the per-pair
-    kernel cost (measured as the 80s+ straggler tasks in the 2M-row scaling
-    arms). Projecting wi into its own column first makes Catalyst keep the
-    two Projects apart (CollapseProject never duplicates non-cheap
-    expressions), so array_intersect + the unpack-sum run exactly once.
-
-    Contract: project `wi_expr` (gated however the caller likes) as column
-    `wi`, THEN apply `wjac_expr`, which reads `wi` by name. Values are
-    bit-identical to the one-shot form — same integer ops, same single double
-    division."""
-    ws1, ws2 = F.col(s1), F.col(s2)
-    size_bound = F.when(F.greatest(ws1, ws2) == 0, F.lit(1.0)).otherwise(
-        F.least(ws1, ws2) / F.greatest(ws1, ws2).cast("double")
-    )
-    wi_expr = F.aggregate(
-        F.array_intersect(F.col(t1), F.col(t2)),
-        F.lit(0).cast("long"),
-        # packed values are non-negative, so x & 63 == pmod(x, 64); the
-        # branch-free form is cheaper in the interpreted lambda
-        lambda acc, x: acc + x.bitwiseAND(F.lit(63)),
-    )
-    wic = F.col(wi)
-    wu = ws1 + ws2 - wic
-    wjac_expr = F.when(wu <= 0, F.lit(1.0)).otherwise(wic / wu.cast("double"))
-    return size_bound, wi_expr, wjac_expr
-
-
 def weighted_jaccard_packed_ix_staged(
     t1: str = "t1",
     t2: str = "t2",
@@ -400,13 +362,18 @@ def weighted_jaccard_packed_ix_staged(
     ix: str = "_ix",
     wi: str = "_wi",
 ):
-    """(size_bound, ix_expr, wi_expr, wjac_expr): the packed kernel split so
-    the INTERSECTION itself is a separately projected codegen'd column — the
-    round-5 scaling fix on top of weighted_jaccard_packed_staged.
+    """(size_bound, ix_expr, wi_expr, wjac_expr): the packed kernel of
+    weighted_jaccard_packed_cols split into three projections, so the pair
+    hot path computes the intersection and its weight sum ONCE per pair.
 
-    Why a third stage: ArrayAggregate is CodegenFallback, so in the two-stage
-    form the array_intersect underneath it evaluates on the INTERPRETED path
-    (boxed elements, generic hash set), and — worse — the blocking-key
+    Why split at all: in the one-shot form the intersection aggregate
+    appears in the zero-union test, the numerator AND the denominator, and
+    because the HOF aggregate is CodegenFallback each occurrence is
+    interpreted separately (3x the per-pair kernel cost, measured as the 80s+
+    straggler tasks in the 2M-row scaling arms). Projecting the weight sum
+    into its own column fixes the repeat but not the rest: the
+    array_intersect under the aggregate then still evaluates on the
+    INTERPRETED path (boxed elements, generic hash set), and the blocking-key
     self-join's WholeStageCodegen pipeline has to END at that projection,
     materializing every candidate pair as a full-width row carrying BOTH
     packed token arrays (~2x 320 B). Stage-metric diagnosis at 2M rows
@@ -427,7 +394,7 @@ def weighted_jaccard_packed_ix_staged(
 
     Contract: project `ix_expr` gated as column `ix` (null when gated off),
     drop t1/t2, project `wi_expr` as `wi`, then apply `wjac_expr` (reads
-    `wi`). Values are bit-identical to both earlier forms: same integer
+    `wi`). Values are bit-identical to the one-shot form: same integer
     weight sums, same single double division, null/empty semantics preserved
     (gated-off -> null wi; empty intersection -> 0)."""
     ws1, ws2 = F.col(s1), F.col(s2)
@@ -468,7 +435,7 @@ def weighted_jaccard_packed_cols(
 
     One-shot single-expression form (the intersection aggregate appears 3x in
     the expression tree): fine for tests and one-off queries; the pair hot
-    path uses weighted_jaccard_packed_staged, which evaluates it once."""
+    path uses weighted_jaccard_packed_ix_staged, which evaluates it once."""
     ws1, ws2 = F.col(s1), F.col(s2)
     size_bound = F.when(F.greatest(ws1, ws2) == 0, F.lit(1.0)).otherwise(
         F.least(ws1, ws2) / F.greatest(ws1, ws2).cast("double")

@@ -406,14 +406,3 @@ def candidate_pairs_with_drops(
     )
     out_cols = ["id1", "id2", "key"] + [f"{c}{n}" for c in feat_cols for n in (1, 2)]
     return cold_pairs.unionByName(hot_pairs).select(*out_cols), drops
-
-
-def candidate_pairs(keys: DataFrame, cfg: LinkageConfig, id_col: str = "rid") -> DataFrame:
-    """(id1, id2, key) candidate pairs — see candidate_pairs_with_drops."""
-    pairs, _ = candidate_pairs_with_drops(keys, cfg, id_col, persist=False)
-    return pairs
-
-
-def distinct_pairs(pairs: DataFrame) -> DataFrame:
-    """Collapse multi-key collisions to unique (id1, id2) edges-to-score."""
-    return pairs.select("id1", "id2").distinct()

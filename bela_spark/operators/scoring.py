@@ -3,19 +3,16 @@
 Reference semantics: the EL classification head scores each candidate pair and
 a fixed threshold gates links (bela/task/joint_el_task.py:52-80, 1132-1142).
 Rebuild: score = w_lev*levenshtein_sim + w_jac*token_jaccard + w_cos*cosine,
-thresholded. Levenshtein and Jaccard are JVM built-ins (whole-stage codegen);
-cosine runs either JVM-side (zip_with+aggregate, oracle-exact) or as a batched
-numpy matmul in mapInPandas (throughput path); Jaro-Winkler is an optional
-Arrow UDF feature.
+thresholded. Every pair is scored inside the blocking-key self-join
+(fused_block_and_score): Levenshtein and (IDF-weighted) Jaccard are JVM
+built-ins under whole-stage codegen, and the optional cosine runs JVM-side
+(zip_with + aggregate, oracle-exact).
 """
 
 from __future__ import annotations
 
 import os
-from typing import Iterator
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 # Member floor below which a hot key skips the S^2 salt grid and pairs in the
@@ -33,140 +30,9 @@ from pyspark.sql import DataFrame, functions as F
 SALT_MIN_KEY_MEMBERS = int(os.environ.get("BELA_SALT_MIN_KEY_MEMBERS", "2048"))
 
 from bela_spark.config import LinkageConfig
-from bela_spark.functions.strings import jaro_winkler_udf, lev_sim
+from bela_spark.functions.strings import lev_sim
 from bela_spark.functions.vectors import cosine_sim
 from bela_spark.operators.idf import weighted_jaccard_packed_ix_staged
-
-
-def attach_pair_features(
-    pairs: DataFrame,
-    records: DataFrame,
-    id_col: str = "rid",
-    feature_cols: tuple[str, ...] = ("norm", "tokens"),
-) -> DataFrame:
-    """Join each side of (id1, id2[, key]) to its record features (J2 analogue).
-
-    Two shuffles on the record id — at cluster scale, bucketing `records` by
-    rid makes both sides co-located; locally AQE handles it.
-    """
-    left = records.select(
-        F.col(id_col).alias("id1"), *[F.col(c).alias(f"{c}_1") for c in feature_cols]
-    )
-    right = records.select(
-        F.col(id_col).alias("id2"), *[F.col(c).alias(f"{c}_2") for c in feature_cols]
-    )
-    return pairs.join(left, "id1").join(right, "id2")
-
-
-def score_pairs(
-    feat: DataFrame,
-    cfg: LinkageConfig,
-    use_cosine: bool = False,
-    use_jaro: bool = False,
-) -> DataFrame:
-    """Add lev_sim / jaccard / (cosine) / (jaro) and the blended `score`.
-
-    With use_cosine the frame must carry embedding_1/embedding_2; weights are
-    renormalized over the active features so the score stays in [0,1].
-    """
-    m = cfg.lev_max_chars
-    out = feat.withColumn(
-        "f_lev", lev_sim(F.substring("norm_1", 1, m), F.substring("norm_2", 1, m))
-    ).withColumn(
-        "f_jac",
-        F.when(
-            F.size(F.array_union("tokens_1", "tokens_2")) == 0, F.lit(1.0)
-        ).otherwise(
-            F.size(F.array_intersect("tokens_1", "tokens_2"))
-            / F.size(F.array_union("tokens_1", "tokens_2")).cast("double")
-        ),
-    )
-    weights = {"f_lev": cfg.w_lev, "f_jac": cfg.w_jac}
-    if use_cosine:
-        out = out.withColumn("f_cos", cosine_sim("embedding_1", "embedding_2"))
-        weights["f_cos"] = cfg.w_cos
-    if use_jaro:
-        out = out.withColumn("f_jw", jaro_winkler_udf("norm_1", "norm_2"))
-        weights["f_jw"] = cfg.w_cos if not use_cosine else 0.15
-    total = sum(weights.values())
-    expr = sum((F.col(c) * (w / total) for c, w in weights.items()), F.lit(0.0))
-    return out.withColumn("score", expr)
-
-
-def score_pairs_batched(feat: DataFrame, cfg: LinkageConfig) -> DataFrame:
-    """Embedding-blend throughput path: one mapInPandas pass computing
-    cosine + Jaro-Winkler per Arrow batch (numpy matmul-style vectorization,
-    E6 mirror: mblink/task/blink_task.py:191-193), with lev/jaccard still
-    JVM-side.
-
-    MEASURED (round 5, 600k rows, local[32], min-of-2, identical 4,006,510
-    pairs): this path is 1.84x FASTER than expressing the same cosine blend
-    in the fused key join (131.8s vs 242.1s end-to-end incl. CC). The HOF
-    cosine (zip_with + aggregate) is interpreted per element per pair —
-    the same per-element overhead that made the unrolled ANN dot product a
-    negative result — while here one einsum amortizes it per Arrow batch,
-    and the pair-sized embedding shuffle the re-attach join costs is cheaper
-    than 4M interpreted 64-dim dot products. So: lexical-only scoring wants
-    the fused JVM path (run_linkage default; zero pair-sized feature
-    shuffles); embedding-blend scoring wants THIS path
-    (batched_scoring=True). See BASELINE.md round-5 notes.
-
-    Input must carry norm_1/2, tokens_1/2, embedding_1/2.
-    """
-    from bela_spark.functions.strings import jaro_winkler_batch
-
-    m = cfg.lev_max_chars
-    gate = jaccard_gate(cfg, use_cosine=True)
-    jvm_scored = feat.withColumn(
-        "f_jac",
-        F.when(
-            F.size(F.array_union("tokens_1", "tokens_2")) == 0, F.lit(1.0)
-        ).otherwise(
-            F.size(F.array_intersect("tokens_1", "tokens_2"))
-            / F.size(F.array_union("tokens_1", "tokens_2")).cast("double")
-        ),
-    ).withColumn(
-        "f_lev",
-        F.when(
-            F.col("f_jac") >= F.lit(gate),
-            lev_sim(F.substring("norm_1", 1, m), F.substring("norm_2", 1, m)),
-        ).otherwise(F.lit(0.0)),
-    ).drop("tokens_1", "tokens_2")
-
-    schema_out = (
-        "id1 string, id2 string, f_lev double, f_jac double, f_cos double, "
-        "f_jw double, score double"
-    )
-    w_l, w_j, w_c = cfg.w_lev, cfg.w_jac, cfg.w_cos
-    tot = w_l + w_j + w_c
-
-    def _score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            if len(b) == 0:
-                continue
-            e1 = np.stack(b["embedding_1"].to_numpy())
-            e2 = np.stack(b["embedding_2"].to_numpy())
-            n1 = np.maximum(np.linalg.norm(e1, axis=1), 1e-12)
-            n2 = np.maximum(np.linalg.norm(e2, axis=1), 1e-12)
-            cos = np.einsum("ij,ij->i", e1, e2) / (n1 * n2)
-            jw = jaro_winkler_batch(
-                b["norm_1"].fillna("").to_numpy(dtype=object),
-                b["norm_2"].fillna("").to_numpy(dtype=object),
-            )
-            score = (w_l * b["f_lev"].to_numpy() + w_j * b["f_jac"].to_numpy() + w_c * cos) / tot
-            yield pd.DataFrame(
-                {
-                    "id1": b["id1"],
-                    "id2": b["id2"],
-                    "f_lev": b["f_lev"],
-                    "f_jac": b["f_jac"],
-                    "f_cos": cos,
-                    "f_jw": jw,
-                    "score": score,
-                }
-            )
-
-    return jvm_scored.mapInPandas(_score, schema=schema_out)
 
 
 def accept_edges(scored: DataFrame, cfg: LinkageConfig) -> DataFrame:

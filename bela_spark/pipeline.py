@@ -24,10 +24,8 @@ from bela_spark.operators.cc import CCResult, connected_components
 from bela_spark.operators.idf import weight_tokens_packed
 from bela_spark.operators.scoring import (
     accept_edges,
-    attach_pair_features,
     dedup_scored,
     fused_block_and_score,
-    score_pairs_batched,
 )
 
 
@@ -113,7 +111,6 @@ def run_linkage(
     df: DataFrame,
     cfg: LinkageConfig | None = None,
     use_embeddings: bool = False,
-    batched_scoring: bool = False,
     persist: bool = True,
     collapse_exact: bool = False,
 ) -> LinkageRun:
@@ -125,14 +122,12 @@ def run_linkage(
     representative's cluster at assignment time, so final clusters are
     identical either way (tests/test_pipeline_f1.py pins this).
 
-    Scorer routing (measured, BASELINE.md round 5): lexical-only scoring —
-    the default and the at_scale/IDF config — uses the fused JVM key join
-    (no pair-sized feature shuffle). When the blend includes embedding
-    cosine, pass batched_scoring=True: the Arrow einsum path beats the
-    fused HOF-cosine join 1.84x at 600k rows (use_embeddings=True remains
-    for the oracle-checked er_scored_pairs_embedding query shape)."""
+    Scoring: one scorer, the fused JVM key join (fused_block_and_score), for
+    every config — lexical-only, the at_scale/IDF blend, and with
+    use_embeddings=True the embedding-cosine blend. Pairs are scored inside
+    the blocking-key self-join, so no pair-sized feature shuffle runs."""
     cfg = cfg or LinkageConfig()
-    records = prepare_records(df, cfg, use_embeddings=use_embeddings or batched_scoring)
+    records = prepare_records(df, cfg, use_embeddings=use_embeddings)
     if persist:
         # records feed three consumers (key gen + both sides of the feature
         # join); scored feeds the edge filter and downstream evaluation
@@ -160,14 +155,6 @@ def run_linkage(
     else:
         base = records
 
-    if batched_scoring and cfg.idf_weighting:
-        raise ValueError(
-            "the legacy batched Arrow scorer is unweighted by design — "
-            "idf_weighting requires the fused JVM path"
-        )
-    feature_cols = ["norm", "tokens"] + (
-        ["embedding"] if (use_embeddings or batched_scoring) else []
-    )
     # dedup=False: (rid, key) is unique by construction (namespaced families,
     # band index in the key string) — see blocking_keys; the distinct this
     # skips was a pure no-op exchange of the widest pre-pair frame (r6).
@@ -228,9 +215,7 @@ def run_linkage(
     # shuffle_hash: both sides are row-proportional, so there is no bounded
     # build side to hash (the rule documented at idf.weight_tokens)
     keys_with_features = keys.join(
-        pair_stage_features(
-            base, cfg, use_embeddings=use_embeddings or batched_scoring
-        ).hint("merge"),
+        pair_stage_features(base, cfg, use_embeddings=use_embeddings).hint("merge"),
         "rid",
     )
     if persist:
@@ -257,31 +242,22 @@ def run_linkage(
             multi.unpersist()
     pairs = scored_by_key.select("id1", "id2", "key")
 
-    if batched_scoring:
-        # legacy Arrow path: re-attach features to unique pairs, numpy-score
-        uniq = scored_by_key.select("id1", "id2").distinct()
-        feat = attach_pair_features(uniq, base, feature_cols=tuple(feature_cols))
-        scored = score_pairs_batched(feat, cfg)
-        if persist:
-            scored = scored.persist()
+    scored = dedup_scored(scored_by_key)
+    if persist:
+        # ONE pair-stage pass per run (r6): persist the deduped scored
+        # pairs and derive the edge set from the cache, so CC's edge
+        # materialization, the caller's count and the (untimed) bench F1
+        # gate all read the same computed-once frame — bench.py already
+        # assumed this handle was persisted (it unpersists run.scored).
+        # Identical edge set either way: scores of a pair are equal
+        # across keys, so filter-then-distinct over the per-key frame ==
+        # filter over the deduped frame.
+        scored = scored.persist()
         edges = accept_edges(scored, cfg)
     else:
-        scored = dedup_scored(scored_by_key)
-        if persist:
-            # ONE pair-stage pass per run (r6): persist the deduped scored
-            # pairs and derive the edge set from the cache, so CC's edge
-            # materialization, the caller's count and the (untimed) bench F1
-            # gate all read the same computed-once frame — bench.py already
-            # assumed this handle was persisted (it unpersists run.scored).
-            # Identical edge set either way: scores of a pair are equal
-            # across keys, so filter-then-distinct over the per-key frame ==
-            # filter over the deduped frame.
-            scored = scored.persist()
-            edges = accept_edges(scored, cfg)
-        else:
-            # threshold BEFORE dedup: the accepted-edge set is tiny next to
-            # the scored-pair set, so distinct() runs on the small side
-            edges = accept_edges(scored_by_key, cfg)
+        # threshold BEFORE dedup: the accepted-edge set is tiny next to
+        # the scored-pair set, so distinct() runs on the small side
+        edges = accept_edges(scored_by_key, cfg)
     cc = connected_components(
         edges, max_rounds=cfg.max_cc_rounds, checkpoint_dir=cfg.checkpoint_dir
     )

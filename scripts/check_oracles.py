@@ -48,9 +48,11 @@ def main():
     import duckdb
 
     import __spark_entry__ as entrymod
-    from bela_spark.session import get_spark
+    from bela_spark.session import default_cpus, get_spark
 
-    spark = get_spark(app_name="oracle-check", master="local[8]", shuffle_partitions=8)
+    spark = get_spark(
+        app_name="oracle-check", master=f"local[{default_cpus()}]", shuffle_partitions=8
+    )
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

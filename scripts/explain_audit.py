@@ -49,10 +49,10 @@ def _idf_pair_stage_tree(spark) -> str:
 
 def main() -> None:
     tag = sys.argv[1] if len(sys.argv) > 1 else "r04"
-    from bela_spark.session import get_spark
+    from bela_spark.session import default_cpus, get_spark
     import bela_spark.queries as q
 
-    spark = get_spark(master="local[8]", shuffle_partitions=8)
+    spark = get_spark(master=f"local[{default_cpus()}]", shuffle_partitions=8)
 
     sections = [
         (

@@ -67,8 +67,6 @@ def main(argv: list[str] | None = None) -> None:
     p.add_argument("--input", required=True, help="source spec (see bela_spark.sources)")
     p.add_argument("--output", required=True, help="output directory or parquet: spec")
     p.add_argument("--checkpoint-dir", default=None, help="CC lineage/resume dir")
-    p.add_argument("--batched-scoring", action="store_true",
-                   help="add embedding-cosine feature (Arrow-batched encoder)")
     p.add_argument("--no-collapse-exact", action="store_true",
                    help="disable exact-content pre-collapse (debug only)")
     p.add_argument("--at-scale", action="store_true",
@@ -92,12 +90,7 @@ def main(argv: list[str] | None = None) -> None:
     )
 
     df = read_repo_files(spark, args.input)
-    run = run_linkage(
-        df,
-        cfg,
-        batched_scoring=args.batched_scoring,
-        collapse_exact=not args.no_collapse_exact,
-    )
+    run = run_linkage(df, cfg, collapse_exact=not args.no_collapse_exact)
 
     out = args.output
     out = (out[len("parquet:"):] if out.startswith("parquet:") else out).rstrip("/")

@@ -20,11 +20,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     passes = int(sys.argv[2]) if len(sys.argv) > 2 else 2
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     import __spark_entry__ as m
-    from bela_spark.session import get_spark
+    from bela_spark.session import default_cpus, get_spark
 
+    cpus = default_cpus()
     spark = get_spark(
         app_name="sweep-queries", master=f"local[{cpus}]",
         shuffle_partitions=max(cpus * 2, 32),

@@ -3,10 +3,13 @@ crossJoin + interpreted-fold plan value-for-value (bit-identical ip_score,
 identical tie-broken ranks), and degrade to the legacy plan on inputs the
 kernel does not cover (ragged/null embeddings, broadcast_catalog=False)."""
 
+import logging
+
 import pytest
 from pyspark.sql import Window as W, functions as F
 
 from bela_spark.functions.vectors import dot_product
+from bela_spark.operators import ann
 from bela_spark.operators.ann import brute_force_topk
 
 
@@ -76,3 +79,18 @@ def test_nonbroadcast_keeps_legacy_plan(spark):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "MapInPandas" not in plan
+
+
+def test_catalogue_above_bound_is_not_collected(spark, monkeypatch, caplog):
+    """Above BROADCAST_CATALOG_MAX_ROWS the catalogue is neither collected
+    nor broadcast: a warning names the count and the bound, the unhinted
+    crossJoin plan runs, and its rows equal the kernel's bit for bit."""
+    e = _tie_frame(spark)
+    kernel = _rows(brute_force_topk(e, e, k=3))
+    monkeypatch.setattr(ann, "BROADCAST_CATALOG_MAX_ROWS", 10)
+    with caplog.at_level(logging.WARNING, logger=ann.__name__):
+        out = brute_force_topk(e, e, k=3)
+    assert "11+ rows" in caplog.text and "BROADCAST_CATALOG_MAX_ROWS=10" in caplog.text
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" not in plan
+    assert _rows(out) == kernel

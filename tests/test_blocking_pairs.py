@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 
 from bela_spark.config import LinkageConfig
 from bela_spark.functions.hashing import band_keys, minhash_signatures, minhash_wide
-from bela_spark.operators.pairs import candidate_pairs, cap_keys
+from bela_spark.operators.pairs import candidate_pairs_with_drops, cap_keys
 
 
 def test_minhash_matches_pure_python(spark):
@@ -44,8 +44,12 @@ def test_salted_join_equals_plain_join(spark):
         [(f"r{i}", "hot") for i in range(30)] + [(f"r{i}", "cold") for i in range(5)],
         ["rid", "key"],
     )
-    plain = candidate_pairs(keys, LinkageConfig(hot_key_threshold=10_000))
-    salted = candidate_pairs(keys, LinkageConfig(hot_key_threshold=10, salt_buckets=4))
+    plain = candidate_pairs_with_drops(
+        keys, LinkageConfig(hot_key_threshold=10_000), persist=False
+    )[0]
+    salted = candidate_pairs_with_drops(
+        keys, LinkageConfig(hot_key_threshold=10, salt_buckets=4), persist=False
+    )[0]
     assert _pairs_set(plain) == _pairs_set(salted)
     # every pair appears exactly once per key
     assert salted.groupBy("id1", "id2", "key").count().filter("count > 1").count() == 0

@@ -176,12 +176,6 @@ def test_null_content_rows_survive_weighting(spark):
         assert run.clusters.count() == 3, f"collapse={collapse}"
 
 
-def test_batched_path_rejects_weighting(spark):
-    df = synth_repo_files(spark, 50, seed=1)
-    with pytest.raises(ValueError, match="batched"):
-        run_linkage(df, LinkageConfig.at_scale(), batched_scoring=True)
-
-
 def test_weight_formula_anchoring():
     """Spot-check the quantized-IDF shape: df=1 gets the max weight,
     ubiquitous tokens get 1, monotone non-increasing in df."""

@@ -1,9 +1,10 @@
 """End-to-end linkage on the labeled fixture: the north-rule acceptance test.
 
 Pairwise F1 >= 0.99 on labeled candidate pairs per blocking key
-(BASELINE.json metric), sha256 row invariant, and scoring-path equivalence.
+(BASELINE.json metric), sha256 row invariant, and the embedding-blend scorer.
 """
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -132,23 +133,30 @@ def test_collapse_exact_same_partitions(spark, fixture_df):
     assert partitions(a.clusters) == partitions(b.clusters)
 
 
-def test_batched_scoring_matches_sql_path(spark, fixture_df):
-    """mapInPandas (numpy) path and built-in path agree on lev/jac and rank
-    the same pairs above threshold."""
+def test_embedding_blend_scores_and_edges(spark, fixture_df):
+    """run_linkage(use_embeddings=True): every scored pair's f_cos is the
+    numpy cosine of the two records' embeddings, its score is the
+    weight-normalized lev/jac/cos blend, and the edges are exactly the pairs
+    at or above the threshold."""
     cfg = LinkageConfig()
-    small = fixture_df.limit(200).drop("group_id")
-    a = run_linkage(small, cfg, persist=False)
-    b = run_linkage(small, cfg, batched_scoring=True, persist=False)
-    sa = {(r["id1"], r["id2"]): (r["f_lev"], r["f_jac"]) for r in a.scored.collect()}
-    sb = {(r["id1"], r["id2"]): (r["f_lev"], r["f_jac"]) for r in b.scored.collect()}
-    assert set(sa) == set(sb)
-    for k, (lev, jac) in sa.items():
-        assert jac == pytest.approx(sb[k][1])
-        # f_lev comparable only above both paths' jaccard gates (the fused
-        # no-cosine path gates lev off exactly where score can't clear the
-        # threshold; the batched cosine path gates at a lower level)
-        if jac >= 0.25:
-            assert lev == pytest.approx(sb[k][0])
+    small = fixture_df.limit(300).drop("group_id")
+    run = run_linkage(small, cfg, use_embeddings=True, persist=False)
+    emb = {
+        r["rid"]: np.asarray(r["embedding"], dtype=np.float64)
+        for r in run.records.select("rid", "embedding").collect()
+    }
+    scored = run.scored.collect()
+    assert len(scored) > 100  # non-degenerate
+    w_l, w_j, w_c = cfg.w_lev, cfg.w_jac, cfg.w_cos
+    for r in scored:
+        e1, e2 = emb[r["id1"]], emb[r["id2"]]
+        cos = float(e1 @ e2 / (np.linalg.norm(e1) * np.linalg.norm(e2)))
+        assert r["f_cos"] == pytest.approx(cos, abs=1e-12)
+        blend = (w_l * r["f_lev"] + w_j * r["f_jac"] + w_c * r["f_cos"]) / (w_l + w_j + w_c)
+        assert r["score"] == pytest.approx(blend, abs=1e-12)
+    expect = {(r["id1"], r["id2"]) for r in scored if r["score"] >= cfg.score_threshold}
+    assert expect  # the threshold accepts something
+    assert {(r["id1"], r["id2"]) for r in run.edges.collect()} == expect
 
 
 def test_null_content_rows_keep_their_cluster_rows(spark):
