@@ -106,6 +106,11 @@ def _rows_for_ids(ids: np.ndarray, n_rows: int, seed: int) -> pd.DataFrame:
     grouped_rows = 4 * n_groups
     heavy_rows = max(0, min(n_rows // HEAVY_EXTRA_FRACTION, n_rows - grouped_rows))
 
+    # per-call memo of everything that depends on the group alone: row i
+    # maps to gid = i % n_groups, so a batch spanning more groups than the
+    # lru caches hold would evict each entry before its next variant reads
+    # it. Bounded by the batch's distinct groups.
+    group_parts: dict[int, tuple[str, str, str]] = {}
     recs = []
     for i in ids:
         i = int(i)
@@ -116,12 +121,18 @@ def _rows_for_ids(ids: np.ndarray, n_rows: int, seed: int) -> pd.DataFrame:
         else:
             gid, variant = -(i + 1), 0  # singleton noise
         if gid >= 0:
-            base = _base_content(gid, seed)
+            parts = group_parts.get(gid)
+            if parts is None:
+                lang = _group_lang(gid, seed)
+                module = _pick(WORDS, seed, gid, "mod")
+                name = _pick(WORDS, seed, gid, "name")
+                parts = group_parts[gid] = (
+                    _base_content(gid, seed),
+                    lang,
+                    f"src/{module}/{name}.{LANG_EXT[lang]}",
+                )
+            base, lang, path = parts
             content = _mutate(base, gid, variant, seed)
-            lang = _group_lang(gid, seed)
-            module = _pick(WORDS, seed, gid, "mod")
-            name = _pick(WORDS, seed, gid, "name")
-            path = f"src/{module}/{name}.{LANG_EXT[lang]}"
             repo = f"org{(gid + variant) % 7}/repo{(gid * 3 + variant) % 23}"
             group = f"g{gid}"
         else:

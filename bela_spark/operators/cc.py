@@ -48,9 +48,11 @@ from __future__ import annotations
 
 import json
 import os
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, functions as F
+
+from bela_spark.session import release
 
 
 @dataclass
@@ -58,6 +60,9 @@ class CCResult:
     assignments: DataFrame  # (rid, component)
     rounds: int
     converged: bool
+    # the localCheckpoints the assignments still read (none on the parquet
+    # path); free them with session.release once the assignments are dead
+    checkpoints: list[DataFrame] = field(default_factory=list)
 
 
 # A canonical edge set at or below this row count is finished by ONE bounded
@@ -512,16 +517,26 @@ def _connected_components_local(
         if local_finish_max_edges is None
         else local_finish_max_edges
     )
+    cuts: list[DataFrame] = []
+
+    def cut(df: DataFrame) -> DataFrame:
+        df = df.localCheckpoint()
+        cuts.append(df)
+        return df
+
     cur0 = _canonical(edges).localCheckpoint()
     n0 = cur0.count()
     if n0 <= lim:
-        stars = _local_star_edges(cur0).localCheckpoint()
+        stars = cut(_local_star_edges(cur0))
+        # the eager cut above materialized the stars: cur0 is dead
+        release(cur0)
         # the union-find pass counts as one round (the checkpointed path
         # persists it as a real round file, so the accounting matches)
         return CCResult(
             assignments=_star_assignments(stars),
             rounds=1 if n0 else 0,
             converged=True,
+            checkpoints=cuts,
         )
 
     nodes = (
@@ -529,8 +544,8 @@ def _connected_components_local(
         .unionByName(cur0.select(F.col("id2").alias("rid")))
         .distinct()
     )
-    mapping = nodes.withColumn("nid", F.monotonically_increasing_id()).localCheckpoint()
-    cur = (
+    mapping = cut(nodes.withColumn("nid", F.monotonically_increasing_id()))
+    cur = cut(
         cur0.join(
             mapping.select(F.col("rid").alias("id1"), F.col("nid").alias("n1")).hint(
                 "merge"
@@ -545,16 +560,17 @@ def _connected_components_local(
         )
         # translation preserves neither order nor canonicality — re-canonicalize
         .select(F.least("n1", "n2").alias("id1"), F.greatest("n1", "n2").alias("id2"))
-        .localCheckpoint()
     )
+    # the mapping and the translated edges are materialized: cur0 is dead
+    release(cur0)
     converged = False
     rounds_done = 0
     settled_parts: list[DataFrame] = []
     for rnd in range(1, 1 + max_rounds):
-        nxt = _small_star(_large_star(_symmetrize(cur))).localCheckpoint()
+        nxt = cut(_small_star(_large_star(_symmetrize(cur))))
         rounds_done = rnd
         settled, frontier = _split_stable(nxt)
-        frontier = frontier.localCheckpoint()
+        frontier = cut(frontier)
         fn = frontier.count()
         settled_parts.append(settled)
         cur = frontier
@@ -563,7 +579,7 @@ def _connected_components_local(
             converged = True
             break
         if fn <= lim:
-            cur = _local_star_edges(frontier).localCheckpoint()
+            cur = cut(_local_star_edges(frontier))
             rounds_done = rnd + 1  # the union-find pass counts as a round
             converged = True
             break
@@ -584,4 +600,9 @@ def _connected_components_local(
     )
     rep = named.groupBy("_comp").agg(F.min("rid").alias("component"))
     assignments = named.join(rep.hint("merge"), "_comp").select("rid", "component")
-    return CCResult(assignments=assignments, rounds=rounds_done, converged=converged)
+    return CCResult(
+        assignments=assignments,
+        rounds=rounds_done,
+        converged=converged,
+        checkpoints=cuts,
+    )

@@ -163,8 +163,9 @@ def weight_tokens_packed(
     weights, same packing, ascending sort == array_sort); above the bound —
     or for non-integer token types — the legacy DAG runs unchanged, so the
     fast path is scale-adaptive (guide §2.2/§4.2). Note the gate makes this
-    function run two small jobs (count + bounded collect) at DAG-construction
-    time; both compute work the legacy plan needed anyway."""
+    function run one aggregate job at DAG-construction time: a bounded
+    collect of the document frequencies, with the document count N riding
+    as the null-token row — work the legacy plan needed anyway."""
     fast = _weight_tokens_packed_broadcast(df, id_col, token_col, ws_col)
     if fast is not None:
         return fast
@@ -221,8 +222,13 @@ def _weight_tokens_packed_broadcast(
     only exchange), a bounded collect of the (token, df) table, then a narrow
     mapInPandas that replaces `token_col` with the sorted packed array and
     appends `ws_col`, passing every other column through untouched. The
-    weight math is exact integer arithmetic: bit_length via searchsorted
-    against powers of two, never a float log."""
+    document count N rides in the same aggregate as the null token's
+    frequency: every row contributes one null at position 0 of its exploded
+    array, so empty and null token arrays count toward N exactly as the
+    legacy scalar subquery counts them, while null ELEMENTS (positions > 0)
+    are dropped as the legacy explode drops them. The weight math is exact
+    integer arithmetic: bit_length via searchsorted against powers of two,
+    never a float log."""
     if IDF_BROADCAST_MAX_TOKENS <= 0:
         return None
     from pyspark.sql.types import ArrayType, IntegerType, LongType, ShortType, ByteType
@@ -235,23 +241,33 @@ def _weight_tokens_packed_broadcast(
 
     import numpy as np
 
-    # one job for N (the legacy plan computes it as a scalar subquery), one
-    # column-pruned dfreq aggregate + bounded collect (the legacy plan runs
-    # the identical aggregate inside its DAG). limit(bound+1) caps the
-    # collect: a vocabulary past the bound falls back before materializing
-    # more than one excess row on the driver.
-    n_docs = df.count()
+    # ONE column-pruned aggregate + bounded collect gives dfreq (the legacy
+    # plan runs the identical aggregate inside its DAG) and N (the legacy
+    # plan's scalar subquery) as the null token's row. limit(bound+2) caps
+    # the collect: a vocabulary past the bound falls back before
+    # materializing more than one excess row on the driver.
+    elem = tok_field.dataType.elementType
+    marked = F.concat(
+        F.array(F.lit(None).cast(elem)),
+        F.coalesce(F.col(token_col), F.array().cast(ArrayType(elem))),
+    )
     dfreq = (
-        df.select(F.explode(token_col).alias("_t"))
-        .where(F.col("_t").isNotNull())
+        df.select(F.posexplode(marked).alias("_pos", "_t"))
+        .where((F.col("_pos") == 0) | F.col("_t").isNotNull())
         .groupBy("_t")
         .agg(F.count("*").alias("_df"))
     )
-    rows = dfreq.limit(IDF_BROADCAST_MAX_TOKENS + 1).toPandas()
-    if len(rows) > IDF_BROADCAST_MAX_TOKENS:
+    # Arrow, not pandas: a null in an integer column would turn the pandas
+    # column into float64
+    import pyarrow.compute as pc
+
+    rows = dfreq.limit(IDF_BROADCAST_MAX_TOKENS + 2).toArrow()
+    toks = rows.filter(pc.is_valid(rows["_t"]))
+    if toks.num_rows > IDF_BROADCAST_MAX_TOKENS:
         return None
-    vocab = rows["_t"].to_numpy(dtype=np.int64)
-    dfs = rows["_df"].to_numpy(dtype=np.int64)
+    n_docs = pc.sum(rows.filter(pc.is_null(rows["_t"]))["_df"]).as_py() or 0
+    vocab = np.asarray(toks["_t"], dtype=np.int64)
+    dfs = np.asarray(toks["_df"], dtype=np.int64)
     order = np.argsort(vocab)
     vocab, dfs = vocab[order], dfs[order]
     pows = np.left_shift(np.int64(1), np.arange(63, dtype=np.int64))
@@ -377,10 +393,11 @@ def weighted_jaccard_packed_ix_staged(
     self-join's WholeStageCodegen pipeline has to END at that projection,
     materializing every candidate pair as a full-width row carrying BOTH
     packed token arrays (~2x 320 B). Stage-metric diagnosis at 2M rows
-    (scripts/diag_stages.py) showed the pair stage's per-pair CPU inflating
-    1.43x from 4 to 16 threads with run_time == cpu_time — memory-subsystem
-    stalls from exactly that traffic, the single-JVM bottleneck behind the
-    0.667 4->16 scaling reading (SCALING_r5_quiet_4_16.json).
+    (BASELINE.md "Round-5 scaling measurement") showed the pair stage's
+    per-pair CPU inflating 1.43x from 4 to 16 threads with run_time ==
+    cpu_time — memory-subsystem stalls from exactly that traffic, the
+    single-JVM bottleneck behind the 0.667 4->16 scaling reading
+    (SCALING_r5_quiet_4_16.json).
 
     Projecting `ix_expr` (gated by the caller) as its own column keeps
     array_intersect inside whole-stage codegen — specialized primitive-long

@@ -102,6 +102,7 @@ def range_boundaries(
     n: int,
     oversample: int = 32,
     chunk_target_rows: int = RANGE_CHUNK_TARGET_ROWS,
+    total: int | None = None,
 ) -> list[tuple]:
     """<= n-1 split tuples over `tuple_cols`, collected once on the driver —
     the explicit, data-derived form of what RangePartitioner samples.
@@ -111,10 +112,13 @@ def range_boundaries(
     selected no matter how the input is partitioned or which plan branch
     re-executes the scan; boundary choice affects only chunk balance, never
     ranks (any order-respecting chunking yields identical two-phase ranks).
-    Costs two column-pruned jobs over `df` (count + filtered collect) —
-    callers with an expensive upstream DAG should persist it (run_linkage
-    does). Tuples containing nulls are excluded from boundary candidacy."""
-    total = df.count()
+    Costs two column-pruned jobs over `df` (count + filtered collect), or
+    only the collect when the caller passes the row count it already
+    measured as `total` — callers with an expensive upstream DAG should
+    persist or cut it (run_linkage does). Tuples containing nulls are
+    excluded from boundary candidacy."""
+    if total is None:
+        total = df.count()
     # scale n to the measured frame (r6): boundaries cost per-ROW eval in the
     # chunk expression (one lexicographic compare chain per boundary), so a
     # 200k-row frame carrying 63 boundaries paid ~3x the chunk CPU it needed.
@@ -152,6 +156,7 @@ def ranked_in_key(
     key_col: str = "key",
     rank_col: str = "_cn",
     num_partitions: int | None = None,
+    total: int | None = None,
 ) -> DataFrame:
     """Global 1-based rank within each key by `order_cols` — two-phase, so no
     task ever sorts a whole mega key (the fix for the single-task WindowExec
@@ -177,13 +182,17 @@ def ranked_in_key(
     The offsets join is left unhinted: offsets has one row per (chunk, key)
     pair, which AQE broadcasts when small but which a dataset with millions
     of distinct mega keys would make a multi-million-row frame — forcing a
-    broadcast there would pressure the driver (ADVICE r4)."""
+    broadcast there would pressure the driver (ADVICE r4).
+
+    `total`, when the caller already knows the row count of `df`, spares
+    range_boundaries its count job; like the boundaries themselves it only
+    sizes the chunks, so ranks never depend on it."""
     n = num_partitions or min(
         int(df.sparkSession.conf.get("spark.sql.shuffle.partitions")), 256
     )
     tuple_cols = [key_col, *order_cols]
     chunk = F.lit(0)
-    for b in range_boundaries(df, tuple_cols, n):
+    for b in range_boundaries(df, tuple_cols, n, total=total):
         chunk = chunk + F.when(_lex_ge(tuple_cols, b), 1).otherwise(0)
     chunked = df.withColumn("_chunk", chunk)
     w_local = W.partitionBy("_chunk", key_col).orderBy(*order_cols)

@@ -97,7 +97,8 @@ def _score_exprs(df: DataFrame, cfg: LinkageConfig, use_cosine: bool) -> DataFra
         # only. The two-stage form ended the join's codegen pipeline at the
         # CodegenFallback aggregate, materializing every pair at full width
         # with array_intersect on the interpreted boxed path — measured as
-        # the 1.43x 4->16-thread per-pair CPU inflation in diag_stages.py.
+        # the 1.43x 4->16-thread per-pair CPU inflation (BASELINE.md
+        # "Round-5 scaling measurement").
         size_bound, ix_expr, wi_expr, jac_from_wi = (
             weighted_jaccard_packed_ix_staged("t1", "t2", "s1", "s2")
         )
@@ -145,6 +146,8 @@ def fused_block_and_score(
     use_cosine: bool = False,
     persist: bool = True,
     counts_attached: bool = False,
+    max_kn: int | None = None,
+    mega_rows: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """The at-scale pair stage: score INSIDE the blocking-key self-join.
 
@@ -178,6 +181,16 @@ def fused_block_and_score(
                                        true mega dup-groups stay connected
                                        through the chain and CC closes them.
 
+    Tier planning: `max_kn` is the largest `_kn` of the input when the
+    caller measured it (run_linkage's counts gate does, in the same
+    aggregate that sizes its broadcast). A tier whose lower bound is at or
+    above it cannot hold a row, so it is neither built nor planned nor run —
+    in particular the chained tier's range-boundary jobs go. `mega_rows`,
+    the chained tier's row total (sum of `_kn` over keys above
+    mega_key_threshold), spares ranked_in_key its count job. With
+    max_kn=None every tier is built, as every caller without the
+    measurement needs; the rows are identical either way.
+
     Returns (scored_by_key, key_log). key_log: (key, n_ids, strategy) for
     every salted or chained key. Dedup to unique pairs happens after the
     cheap threshold filter (accept_edges) or via dedup_scored().
@@ -193,18 +206,20 @@ def fused_block_and_score(
     # count-window buffered each key's whole membership in one task — the
     # 10^8-member near-dup family would be a single-task straggler. The join
     # has two branches over the input (counts + probe), so callers whose
-    # key-gen DAG is expensive should persist the input themselves AND keep
-    # the handle to unpersist it once this joined frame is materialized
-    # (run_linkage does exactly that via LinkageRun.keys_features) — an
-    # unconditional persist here would be an unreleasable second cache of
-    # the pair stage for the life of the session.
+    # key-gen DAG is expensive should cut or persist the input themselves
+    # and free it when the run is done (run_linkage cuts it with
+    # localCheckpoint, LinkageRun.keys_features, freed by
+    # LinkageRun.release) — an unconditional persist here would be an
+    # unreleasable second cache of the pair stage for the life of the
+    # session.
     #
     # counts_attached=True: the caller already carries `_kn` on the input
     # (run_linkage r6: counts are aggregated over the SLIM (rid, key) frame
     # BEFORE the feature join — the key-gen/feature join is 1:1 per rid, so
     # the per-key cardinalities are identical — and the joined frame is the
-    # caller's ONE persisted cache). Skips both the wide-row counts join and
-    # the duplicate internal persist that double-cached the pair-stage input.
+    # caller's ONE materialized frame). Skips both the wide-row counts join
+    # and the duplicate internal persist that double-cached the pair-stage
+    # input.
     if counts_attached:
         keyed = keys_with_features
     else:
@@ -257,11 +272,13 @@ def fused_block_and_score(
     salt_floor = max(cfg.hot_key_threshold, SALT_MIN_KEY_MEMBERS)
     cold_hi = min(salt_floor, cfg.mega_key_threshold)
     cold = keyed.filter((F.col("_kn") >= 2) & (F.col("_kn") <= cold_hi))
-    hot = keyed.filter(
-        (F.col("_kn") > salt_floor) & (F.col("_kn") <= cfg.mega_key_threshold)
-    )
-    mega = keyed.filter(F.col("_kn") > cfg.mega_key_threshold)
-    salt_tier_live = salt_floor < cfg.mega_key_threshold
+
+    def can_hold(lower: int) -> bool:
+        """Whether a tier of keys with _kn > lower can hold a row."""
+        return max_kn is None or max_kn > lower
+
+    salt_tier_live = salt_floor < cfg.mega_key_threshold and can_hold(salt_floor)
+    mega_tier_live = can_hold(cfg.mega_key_threshold)
 
     # the tier self-joins carry row-proportional sides: hint("merge") pins
     # the sort-merge shape the scaling work measured (SCALING.json) AND
@@ -276,6 +293,9 @@ def fused_block_and_score(
     )
 
     if salt_tier_live:
+        hot = keyed.filter(
+            (F.col("_kn") > salt_floor) & (F.col("_kn") <= cfg.mega_key_threshold)
+        )
         s = cfg.salt_buckets
         salted = hot.withColumn("_salt", F.pmod(F.xxhash64(id_col), F.lit(s)))
         left = salted.withColumn(
@@ -311,26 +331,34 @@ def fused_block_and_score(
         # F.sequence(_cn+1, _cn+0) would default to step -1 and emit a
         # self-pair per member — chaining cannot be "off", only bounded
         raise ValueError(f"chain_window must be >= 1, got {w}")
-    mega = ranked_in_key(mega, ("norm", id_col), key_col="key", rank_col="_cn")
-    chain_left = mega.withColumn(
-        "_cn2", F.explode(F.sequence(F.col("_cn") + 1, F.col("_cn") + w))
-    )
-    mega_pairs = (
-        side(chain_left, 1, extra=("_cn2",))
-        .repartition(n_pair_parts, "key", "_cn2")
-        .join(
-            side(mega.withColumnRenamed("_cn", "_cn2"), 2, extra=("_cn2",)).hint(
-                "merge"
-            ),
-            ["key", "_cn2"],
+    if mega_tier_live:
+        mega = ranked_in_key(
+            keyed.filter(F.col("_kn") > cfg.mega_key_threshold),
+            ("norm", id_col),
+            key_col="key",
+            rank_col="_cn",
+            total=mega_rows,
         )
-        .drop("_cn2")
-    )
+        chain_left = mega.withColumn(
+            "_cn2", F.explode(F.sequence(F.col("_cn") + 1, F.col("_cn") + w))
+        )
+        mega_pairs = (
+            side(chain_left, 1, extra=("_cn2",))
+            .repartition(n_pair_parts, "key", "_cn2")
+            .join(
+                side(mega.withColumnRenamed("_cn", "_cn2"), 2, extra=("_cn2",)).hint(
+                    "merge"
+                ),
+                ["key", "_cn2"],
+            )
+            .drop("_cn2")
+        )
 
     pair_feat = cold_pairs
     if salt_tier_live:
         pair_feat = pair_feat.unionByName(hot_pairs)
-    pair_feat = pair_feat.unionByName(mega_pairs)
+    if mega_tier_live:
+        pair_feat = pair_feat.unionByName(mega_pairs)
     scored = _score_exprs(pair_feat, cfg, use_cosine)
     # content-ordered chaining no longer guarantees id1 < id2 — canonicalize
     # inside the final projection (every feature is symmetric in the two

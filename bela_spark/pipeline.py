@@ -12,7 +12,7 @@ evaluation helpers.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -27,6 +27,7 @@ from bela_spark.operators.scoring import (
     dedup_scored,
     fused_block_and_score,
 )
+from bela_spark.session import release
 
 
 @dataclass
@@ -41,8 +42,20 @@ class LinkageRun:
     edges: DataFrame          # id1, id2 accepted
     cc: CCResult
     clusters: DataFrame       # records + cluster_id
-    keys_features: DataFrame = None  # pair-stage input (persisted when
-                                     # persist=True — unpersist with records)
+    keys_features: DataFrame = None  # pair-stage input (a localCheckpoint
+                                     # when persist=True)
+    # the caches and checkpoints the run still holds (records and
+    # keys_features cuts, the scored cache); release() frees them
+    held: list[DataFrame] = field(default_factory=list, repr=False)
+
+    def release(self) -> None:
+        """Free everything the run holds in executor storage: its caches,
+        its checkpoints and connected_components' checkpoints. Every frame
+        of the run is unreadable afterwards (a read fails loud); frames a
+        caller cached on top of the run are the caller's to unpersist."""
+        release(*self.held, *self.cc.checkpoints)
+        self.held.clear()
+        self.cc.checkpoints.clear()
 
 
 def prepare_records(
@@ -127,11 +140,18 @@ def run_linkage(
     use_embeddings=True the embedding-cosine blend. Pairs are scored inside
     the blocking-key self-join, so no pair-sized feature shuffle runs."""
     cfg = cfg or LinkageConfig()
+    # With persist=True the pass cuts lineage twice with an eager
+    # localCheckpoint: at the records it keys on and at the pair-stage
+    # input. Every later DataFrame call and action then analyses and plans a
+    # LogicalRDD leaf instead of the whole scan -> normalize -> collapse ->
+    # key-gen -> IDF tree, which each tier branch of the self-join would
+    # otherwise copy. The price: a lost executor fails the pass loud
+    # (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND) instead of recomputing, as CC's and
+    # ingest's cuts already do. The caches a cut makes dead are freed as
+    # soon as it is taken; LinkageRun.release frees the rest.
+    # persist=False stays fully lazy.
+    held: list[DataFrame] = []
     records = prepare_records(df, cfg, use_embeddings=use_embeddings)
-    if persist:
-        # records feed three consumers (key gen + both sides of the feature
-        # join); scored feeds the edge filter and downstream evaluation
-        records = records.persist()
 
     if collapse_exact:
         # one shuffle on a compact 128-bit key (never on the full norm string):
@@ -142,6 +162,10 @@ def run_linkage(
         # The key is null-coalesced: an equi-join drops null keys where the
         # old window kept a null partition, and every input row must keep its
         # cluster_id. "\0" cannot collide with md5's hex output.
+        if persist:
+            # the collapse reads records twice (reps aggregate + join probe)
+            records = records.persist()
+        pre_collapse = records
         ck = F.coalesce(F.md5("norm"), F.lit("\0"))
         reps = records.groupBy(ck.alias("_ck")).agg(F.min("rid").alias("rep"))
         records = (
@@ -149,11 +173,13 @@ def run_linkage(
             .join(reps.hint("shuffle_hash"), "_ck")
             .drop("_ck")
         )
-        if persist:
-            records = records.persist()
-        base = records.filter(F.col("rid") == F.col("rep"))
-    else:
-        base = records
+    if persist:
+        # records feed key gen, the feature join and cluster assignment
+        records = records.localCheckpoint()
+        held.append(records)
+        if collapse_exact:
+            pre_collapse.unpersist()
+    base = records.filter(F.col("rid") == F.col("rep")) if collapse_exact else records
 
     # dedup=False: (rid, key) is unique by construction (namespaced families,
     # band index in the key string) — see blocking_keys; the distinct this
@@ -162,10 +188,8 @@ def run_linkage(
     if persist:
         # the counts join below evaluates its input twice (counts branch +
         # probe branch); without this persist each branch re-runs the whole
-        # key-gen DAG — 16x md5 minhash included. Scoped: unpersisted as soon
-        # as the kwf cache is materialized (fused_block_and_score runs its
-        # range-boundary jobs eagerly, so by the time it returns the joined
-        # cache holds the data and this one is dead weight).
+        # key-gen DAG — 16x md5 minhash included. Freed as soon as the
+        # pair-stage input is cut.
         keys_slim = keys_slim.persist()
     # key cardinalities aggregated over the SLIM (rid, key) frame BEFORE the
     # feature join (r6): the key-gen/feature join below is 1:1 per rid
@@ -173,32 +197,41 @@ def run_linkage(
     # per-key counts are identical to counting after the join — but the
     # counts shuffle + shuffle-hash probe now carry ~100 B/row instead of the
     # full feature payload, and fused_block_and_score no longer needs its own
-    # counts join + internal persist: ONE cache (this frame) feeds the whole
-    # pair stage instead of two near-identical wide caches (guide §2.3).
+    # counts join + internal persist: ONE materialized frame (the cut
+    # pair-stage input below) feeds the whole pair stage instead of two
+    # near-identical wide caches (guide §2.3).
     # min_count=2: a _kn = 1 key cannot emit a pair, and under selective
     # blocking ~78% of key rows are singletons — every downstream consumer
     # (tier filters, key log, boundaries) either filters _kn >= 2 itself or
     # only looks at _kn > hot, so dropping them AT THE COUNTS JOIN yields
-    # identical pairs/drops while the feature join and the kwf cache shrink
-    # ~4.6x (guide §2.3: shuffle fewer rows, earlier).
+    # identical pairs/drops while the feature join and the pair-stage input
+    # shrink ~4.6x (guide §2.3: shuffle fewer rows, earlier).
     from bela_spark.operators.pairs import COUNTS_BROADCAST_MAX_KEYS, keyed_with_counts
 
-    multi = None
-    if persist and COUNTS_BROADCAST_MAX_KEYS > 0:
+    max_kn = mega_rows = None
+    if persist:
         # measured-count broadcast gate (see COUNTS_BROADCAST_MAX_KEYS): the
         # filtered counts table is tiny under selective blocking (~140k keys
         # at 600k records), and broadcasting it lets the 2.45M-row probe side
-        # flow narrow into the join instead of shuffling. The count is exact
-        # (an aggregate over the cached slim keys, never a size estimate);
-        # above the bound the pinned shuffle-hash join runs as before.
+        # flow narrow into the join instead of shuffling. ONE aggregate over
+        # the cached counts measures the key count (exact, never a size
+        # estimate), the largest key (which tiers of fused_block_and_score
+        # can hold a row) and the chained tier's row total (its rank
+        # boundaries); above the bound the pinned shuffle-hash join runs.
         multi = (
             keys_slim.groupBy("key")
             .agg(F.count("*").alias("_kn"))
             .filter(F.col("_kn") >= 2)
             .persist()
         )
+        kn = F.col("_kn")
+        n_multi, max_kn, mega_rows = multi.agg(
+            F.count("*"),
+            F.coalesce(F.max(kn), F.lit(0)),
+            F.coalesce(F.sum(F.when(kn > cfg.mega_key_threshold, kn)), F.lit(0)),
+        ).first()
         cnt = multi.withColumnRenamed("key", "_kwc_key")
-        if multi.count() <= COUNTS_BROADCAST_MAX_KEYS:
+        if 0 < COUNTS_BROADCAST_MAX_KEYS and n_multi <= COUNTS_BROADCAST_MAX_KEYS:
             cnt = F.broadcast(cnt)
         else:
             cnt = cnt.hint("shuffle_hash")
@@ -219,27 +252,22 @@ def run_linkage(
         "rid",
     )
     if persist:
-        # the tier filters + range boundaries + key log inside
-        # fused_block_and_score all read this frame at materialization;
-        # cache it and KEEP THE HANDLE (LinkageRun.keys_features) so callers
-        # can release it — an anonymous persist would be dead weight once
-        # the joined frame is cached
-        keys_with_features = keys_with_features.persist()
+        # every tier branch of the self-join, the key log and any range
+        # boundaries read this frame: cut it, and free the slim keys and the
+        # counts, which the cut has made dead
+        keys_with_features = keys_with_features.localCheckpoint()
+        held.append(keys_with_features)
+        keys_slim.unpersist()
+        multi.unpersist()
     scored_by_key, drops = fused_block_and_score(
         keys_with_features,
         cfg,
         use_cosine=use_embeddings,
         persist=persist,
         counts_attached=True,
+        max_kn=max_kn,
+        mega_rows=mega_rows,
     )
-    if persist:
-        # kwf was materialized by fused_block_and_score's eager range-boundary
-        # jobs; the slim key cache has served its purpose (one key-gen pass
-        # feeding both counts branches) and would otherwise sit for the whole
-        # run
-        keys_slim.unpersist()
-        if multi is not None:
-            multi.unpersist()
     pairs = scored_by_key.select("id1", "id2", "key")
 
     scored = dedup_scored(scored_by_key)
@@ -247,12 +275,13 @@ def run_linkage(
         # ONE pair-stage pass per run (r6): persist the deduped scored
         # pairs and derive the edge set from the cache, so CC's edge
         # materialization, the caller's count and the (untimed) bench F1
-        # gate all read the same computed-once frame — bench.py already
-        # assumed this handle was persisted (it unpersists run.scored).
+        # gate all read the same computed-once frame (LinkageRun.release
+        # frees it).
         # Identical edge set either way: scores of a pair are equal
         # across keys, so filter-then-distinct over the per-key frame ==
         # filter over the deduped frame.
         scored = scored.persist()
+        held.append(scored)
         edges = accept_edges(scored, cfg)
     else:
         # threshold BEFORE dedup: the accepted-edge set is tiny next to
@@ -275,7 +304,7 @@ def run_linkage(
         clusters = assign_clusters(records, cc.assignments)
     return LinkageRun(
         records, keys, drops, pairs, scored_by_key, scored, edges, cc, clusters,
-        keys_features=keys_with_features,
+        keys_features=keys_with_features, held=held,
     )
 
 

@@ -54,6 +54,25 @@ def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
     return f"{min(DRIVER_MEM_MAX_MB, max(DRIVER_MEM_MIN_MB, mb))}m"
 
 
+def release(*frames) -> None:
+    """Free what each frame holds in executor storage: its cache and, for a
+    frame made by ``localCheckpoint``, the checkpoint's blocks.
+
+    ``unpersist`` and ``clearCache`` leave checkpoint blocks resident until
+    the ContextCleaner notices the RDD is unreachable; only unpersisting the
+    checkpointed RDD under the frame's ``LogicalRDD`` frees them at once. A
+    frame read after its checkpoint is freed fails loud
+    (``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``); it never recomputes. ``None``
+    entries are skipped."""
+    for df in frames:
+        if df is None:
+            continue
+        df.unpersist()
+        plan = df._jdf.queryExecution().analyzed()
+        if plan.getClass().getSimpleName() == "LogicalRDD":
+            plan.rdd().unpersist(False)
+
+
 def get_spark(
     app_name: str = "bela_spark",
     master: str | None = None,

@@ -60,6 +60,14 @@ class IncrementalLinkage:
     def __init__(self, state_dir: str, cfg: LinkageConfig | None = None):
         self.state_dir = state_dir
         self.cfg = cfg or LinkageConfig()
+        if self.cfg.idf_weighting:
+            # IDF weights are corpus-global document frequencies; the
+            # micro-batch pair stage has no weighted token sets to score
+            raise ValueError(
+                "IncrementalLinkage does not support idf_weighting=True: "
+                "streaming IDF weighting is out of scope; use a config with "
+                "idf_weighting=False (e.g. LinkageConfig())"
+            )
         self.records_dir = os.path.join(state_dir, "records")
         self.keys_dir = os.path.join(state_dir, "keys")
         self.edges_dir = os.path.join(state_dir, "edges")

@@ -57,15 +57,9 @@ def main() -> None:
     def timed(name, fn):
         best, out = None, None
         for _ in range(passes):
-            # each pass starts cache-clean: run_linkage persists frames it has
-            # no handle to unpersist (internal keyed frame, pre-collapse
-            # records), and pass 2 measuring under pass 1's leaked caches
-            # would skew the very steady-state the min exists to capture.
-            # clearCache drops catalog-tracked persists only; executor-local
-            # blocks from the CC loop's localCheckpoints linger until the
-            # ContextCleaner collects them (ADVICE r4) — acceptable, since
-            # checkpoint blocks are plan-truncation artifacts that are never
-            # reused across passes, so they cost memory, not time.
+            # each pass starts cache-clean, so pass 2 does not measure under
+            # pass 1's caches; a linkage pass's checkpoints are freed by its
+            # LinkageRun.release (clearCache does not reach them)
             spark.catalog.clearCache()
             t0 = time.time()
             out = fn()
@@ -120,9 +114,10 @@ def main() -> None:
         extras["n_clusters"] = n_clusters
         extras["n_salted_keys"] = strat.get("salted", 0)
         extras["n_chained_keys"] = strat.get("chained", 0)
-        # no unpersist here: the clearCache at the top of every timed pass
-        # releases the previous pass's frames, and leaving the LAST pass's
-        # persisted scored/pairs alive lets the F1 gate below reuse them
+        # the LAST pass's run stays alive so the F1 gate below can reuse its
+        # scored/pairs; an earlier pass's run is released here
+        if last_run:
+            last_run[0].release()
         last_run[:] = [run]
         return n_pairs
 
@@ -150,9 +145,7 @@ def main() -> None:
     extras["bench_scale_tp"] = f1_row["tp"]
     extras["bench_scale_fp"] = f1_row["fp"]
     extras["bench_scale_fn"] = f1_row["fn"]
-    run.records.unpersist()
-    run.scored.unpersist()
-    run.keys_features.unpersist()
+    run.release()
 
     # 2b. chained-regime linkage (VERDICT r4 missing #2): the sorted-
     # neighborhood tier — the regime that dominates at 4M+ rows / 100 TB —
@@ -182,9 +175,7 @@ def main() -> None:
         extras["chained_n_clusters"] = n_clusters_c
         extras["chained_n_chained_keys"] = strat.get("chained", 0)
         extras["chained_n_salted_keys"] = strat.get("salted", 0)
-        run.records.unpersist()
-        run.scored.unpersist()
-        run.keys_features.unpersist()
+        run.release()
         return n_pairs_c
 
     n_pairs_c = timed("linkage_chained_regime", _linkage_chained)

@@ -62,8 +62,9 @@ def worker(cpus: int, rows: int) -> None:
     # three tiers, salting for skew), so adaptive re-planning contributes
     # nothing here — but it inserts a full materialization barrier at every
     # query stage, serializing the DAG's independent branches. Measured at
-    # 2M rows / 16 threads (scripts/diag_scaling.py, quiet box): 40.4s with
-    # AQE -> 30.4s without (idle cores 20% -> ~5%); the 4-thread arm is
+    # 2M rows / 16 threads (BASELINE.md "Round-5 scaling measurement",
+    # quiet box): 40.4s with AQE -> 30.4s without (idle cores 20% -> ~5%);
+    # the 4-thread arm is
     # barely affected (utilization was already 98%), i.e. the barriers are
     # precisely a parallelism tax. A cluster deployment of THIS stage wants
     # the same setting (submit_linkage.py documents it); AQE stays on in the

@@ -8,6 +8,20 @@ def executed_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def jobs_run(spark, fn):
+    """(fn(), the number of Spark jobs fn started on this thread)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-run-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(

@@ -3,9 +3,10 @@
 bench.py and scripts/submit_linkage.py run the linkage pipeline with
 spark.sql.adaptive.enabled=false (the pipeline pins every pair-stage
 shuffle's partitioning, so AQE only adds per-query-stage materialization
-barriers — measured 25% wall tax at 16 threads, scripts/diag_scaling.py).
-That is only sound if results are bit-identical either way; this test pins
-it at a scale where all three key tiers (cold / salted / chained) engage,
+barriers — measured 25% wall tax at 16 threads, BASELINE.md "Round-5 scaling
+measurement"). That is only sound if results are bit-identical either way;
+this test pins it at a scale where all three key tiers (cold / salted /
+chained) engage,
 guarding against any future operator re-introducing plan-dependent values
 (the spark_partition_id chunk-id divergence of round 4 was exactly such a
 bug, caught at 600k rows only).
@@ -34,9 +35,7 @@ def _signature(spark, df_rows):
         F.count("*").alias("n"),
         F.sum(F.hash("rid", "cluster_id")).alias("digest"),
     ).collect()[0]
-    run.records.unpersist()
-    run.scored.unpersist()
-    run.keys_features.unpersist()
+    run.release()
     return tuple(scored) + tuple(clusters)
 
 

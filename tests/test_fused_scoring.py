@@ -150,3 +150,54 @@ def test_jaccard_gate_formula():
     assert g == pytest.approx(0.2)
     # with cosine active the gate goes negative -> never gated
     assert jaccard_gate(cfg, use_cosine=True) < 0
+
+
+@pytest.mark.parametrize("tiers", ["hot_and_chained_empty", "hot_and_chained_live"])
+def test_measured_max_kn_matches_all_tier_build(spark, base, monkeypatch, tiers):
+    """With the measured max_kn (and the chained tier's row total)
+    fused_block_and_score returns exactly the rows of the all-tiers build
+    (max_kn=None), on an input whose salted and chained tiers are empty and
+    on one where both are live. Empty tiers are not planned, and building
+    the stage runs no Spark job: the chained tier's range-boundary count is
+    taken from mega_rows, not from a job."""
+    from conftest import executed_plan, jobs_run
+
+    import bela_spark.operators.scoring as scoring_mod
+    from bela_spark.operators.pairs import keyed_with_counts
+
+    if tiers == "hot_and_chained_live":
+        # floor 0: keys above hot_key_threshold take the salt grid
+        monkeypatch.setattr(scoring_mod, "SALT_MIN_KEY_MEMBERS", 0)
+        cfg = LinkageConfig(
+            hot_key_threshold=3, mega_key_threshold=8, salt_buckets=4, chain_window=2
+        )
+    else:
+        cfg = LinkageConfig()
+    kwf = keyed_with_counts(_kwf(base, cfg), min_count=2).cache()
+    kn = F.col("_kn")
+    per_key = kwf.groupBy("key").agg(F.max(kn).alias("_kn"))
+    max_kn, mega_rows = per_key.agg(
+        F.max(kn), F.coalesce(F.sum(F.when(kn > cfg.mega_key_threshold, kn)), F.lit(0))
+    ).first()
+    if tiers == "hot_and_chained_live":
+        assert max_kn > cfg.mega_key_threshold
+        assert per_key.filter((kn > 3) & (kn <= 8)).count() > 0
+    else:
+        assert 2 <= max_kn <= cfg.hot_key_threshold
+
+    full, full_log = fused_block_and_score(kwf, cfg, counts_attached=True, persist=False)
+    (measured, measured_log), jobs = jobs_run(
+        spark,
+        lambda: fused_block_and_score(
+            kwf, cfg, counts_attached=True, persist=False,
+            max_kn=max_kn, mega_rows=mega_rows,
+        ),
+    )
+    assert jobs == 0
+    assert sorted(map(tuple, measured.collect())) == sorted(map(tuple, full.collect()))
+    assert sorted(map(tuple, measured_log.collect())) == sorted(map(tuple, full_log.collect()))
+    plan = executed_plan(measured)
+    live = tiers == "hot_and_chained_live"
+    assert ("_s1" in plan) == live  # the salt grid's join column
+    assert ("_cn2" in plan) == live  # the chain's join column
+    kwf.unpersist()

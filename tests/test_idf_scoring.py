@@ -286,3 +286,43 @@ def test_packed_broadcast_fast_path_schema_matches_legacy(spark, monkeypatch):
     assert legacy.columns == ["rid", "norm", "n", "tokens", "ws"]
     assert fast.dtypes == legacy.dtypes
     assert sorted(map(tuple, fast.collect())) == sorted(map(tuple, legacy.collect()))
+
+
+def test_packed_gate_is_one_aggregate_and_counts_empty_rows(spark, monkeypatch):
+    """The broadcast gate takes N and the document frequencies from ONE
+    aggregate job (N rides as the null token's row), and the kernel stays
+    bit-identical to the legacy join DAG. Empty and null token arrays count
+    toward N: 3 rows with tokens and 5 without make N = 8, whose bit length
+    differs from N = 3's, so a gate that dropped them would move every
+    weight; a null ELEMENT counts neither as a token nor as a document."""
+    from conftest import jobs_run
+
+    from bela_spark.operators import idf
+
+    rows = [
+        ("r1", [5, 3]),
+        ("r2", [3]),
+        ("r3", [7, None, 5]),
+        ("r4", []),
+        ("r5", None),
+        ("r6", []),
+        ("r7", None),
+        ("r8", []),
+    ]
+    df = spark.createDataFrame(rows, "rid string, tokens array<int>")
+    _, agg_jobs = jobs_run(spark, lambda: df.groupBy("rid").count().collect())
+    fast, gate_jobs = jobs_run(spark, lambda: idf.weight_tokens_packed(df))
+    assert "MapInPandas" in fast._jdf.queryExecution().executedPlan().toString()
+    assert gate_jobs == agg_jobs
+    monkeypatch.setattr(idf, "IDF_BROADCAST_MAX_TOKENS", 0)
+    legacy = idf.weight_tokens_packed(df)
+
+    def snap(d):
+        return {r["rid"]: (list(r["tokens"]), r["ws"]) for r in d.collect()}
+
+    got = snap(fast)
+    assert got == snap(legacy)
+    w = {t: _py_weight(8, d) for t, d in ((3, 2), (5, 2), (7, 1))}
+    assert got["r1"] == ([3 * 64 + w[3], 5 * 64 + w[5]], w[3] + w[5])
+    assert got["r3"] == ([5 * 64 + w[5], 7 * 64 + w[7]], w[5] + w[7])
+    assert all(got[r] == ([], 0) for r in ("r4", "r5", "r6", "r7", "r8"))

@@ -175,3 +175,30 @@ def test_null_content_rows_keep_their_cluster_rows(spark):
     for collapse in (False, True):
         run = run_linkage(df, LinkageConfig(), persist=False, collapse_exact=collapse)
         assert run.clusters.count() == 4, f"collapse_exact={collapse} dropped rows"
+
+
+@pytest.mark.parametrize("cc_local_finish_max_edges", [None, 0])
+def test_release_frees_every_rdd_the_run_holds(
+    spark, fixture_df, monkeypatch, cc_local_finish_max_edges
+):
+    """LinkageRun.release frees the run's caches AND its checkpoints
+    (unpersist and clearCache leave localCheckpoint blocks resident): after
+    it, none of the RDDs the run added is in getPersistentRDDs. Covered on
+    both CC paths, the one-task union-find and the distributed rounds."""
+    import bela_spark.operators.cc as cc_mod
+
+    if cc_local_finish_max_edges is not None:
+        monkeypatch.setattr(cc_mod, "CC_LOCAL_FINISH_MAX_EDGES", cc_local_finish_max_edges)
+    jsc = spark.sparkContext._jsc
+
+    def persistent():
+        return set(jsc.getPersistentRDDs().keySet().toArray())
+
+    before = persistent()
+    small = fixture_df.drop("group_id").limit(300)
+    run = run_linkage(small, LinkageConfig.at_scale(), collapse_exact=True)
+    assert run.scored.count() > 0
+    assert run.clusters.count() == 300
+    assert persistent() - before, "the run holds no cache or checkpoint"
+    run.release()
+    assert not persistent() - before

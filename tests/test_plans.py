@@ -84,7 +84,8 @@ def test_weighted_intersection_outside_fallback_project(spark):
     refactor that references _ix only once) lets CollapseProject inline the
     intersection back under the aggregate, the same plan line would carry
     both expressions: the interpreted-path regression measured as the 1.43x
-    per-pair CPU inflation from 4 to 16 threads (scripts/diag_stages.py)."""
+    per-pair CPU inflation from 4 to 16 threads (BASELINE.md "Round-5 scaling
+    measurement")."""
     from pyspark.sql import functions as F
 
     from bela_spark.config import LinkageConfig
@@ -151,3 +152,32 @@ def test_no_row_proportional_broadcast_in_linkage_final_plan(spark):
             f"{name}: row-proportional join broadcast in the final plan:\n"
             + "\n".join(offending)
         )
+
+
+def _plan_leaves(df) -> set[str]:
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return {leaves.apply(i).getClass().getSimpleName() for i in range(leaves.size())}
+
+
+def test_pair_stage_is_rooted_at_lineage_cuts(spark, tmp_path):
+    """With persist=True run_linkage cuts lineage with localCheckpoint at the
+    records and at the pair-stage input, so every leaf under the pair stage
+    (and under the cluster table) is a LogicalRDD and no file scan remains:
+    each tier branch and each later action plans a short tree, not the
+    scan -> normalize -> collapse -> key-gen -> IDF lineage."""
+    from bela_spark.config import LinkageConfig
+    from bela_spark.fixtures import synth_repo_files
+    from bela_spark.pipeline import run_linkage
+
+    path = str(tmp_path / "repo_files")
+    synth_repo_files(spark, 400, seed=7).write.parquet(path)
+    df = spark.read.parquet(path)
+    assert "LogicalRDD" not in _plan_leaves(df)
+    run = run_linkage(df, LinkageConfig.at_scale(), collapse_exact=True)
+    try:
+        for name in ("records", "keys_features", "scored_by_key", "scored", "clusters"):
+            frame = getattr(run, name)
+            assert _plan_leaves(frame) == {"LogicalRDD"}, name
+            assert "FileScan" not in executed_plan(frame), name
+    finally:
+        run.release()

@@ -252,3 +252,10 @@ def test_state_without_valid_keys_is_rekeyed(spark, tmp_path, monkeypatch, state
     # the rewritten keys/ carries this config's parameters again
     params = {r[0] for r in spark.read.parquet(inc.keys_dir).select("key_params").distinct().collect()}
     assert params == {key_params(inc.cfg)}
+
+
+def test_idf_config_is_rejected(tmp_path):
+    """Streaming IDF is out of scope: an IDF config fails at construction,
+    not later inside the pair stage."""
+    with pytest.raises(ValueError, match="streaming IDF"):
+        IncrementalLinkage(str(tmp_path / "state"), LinkageConfig.at_scale())
