@@ -8,7 +8,7 @@ re-expresses that dataflow Spark-first over an Iceberg-shaped table of
 source-code repositories (``repo_files(repo, path, commit, lang, content)``):
 
   blocking (MinHash-LSH + token-prefix keys)   ~ BELA's FAISS candidate bound
-  salted candidate-pair equi-join              ~ batched top-k retrieval (J1/J3)
+  candidate-pair equi-join per blocking key    ~ batched top-k retrieval (J1/J3)
   pairwise scoring inside the key join         ~ EL classification head (E6/E8)
   threshold + transitive clustering (CC)       ~ entity-id assignment
   micro pairwise P/R/F1                        ~ bela/evaluation/model_eval.py

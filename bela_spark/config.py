@@ -7,7 +7,7 @@ lazy DataFrame DAG itself.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -21,11 +21,11 @@ class LinkageConfig:
     band_size: int = 4          # 16/4 = 4 bands; pairs agreeing on >=1 band collide
 
     # --- candidate-pair generation (J3) ---
-    salt_buckets: int = 8       # salted self-join grid for hot keys
-    hot_key_threshold: int = 64      # ids per key above which salting kicks in
-                                     # (C(64,2) ~ 2k pair-emits keeps cold join
-                                     # tasks fine-grained — no output-skew
-                                     # stragglers; bigger keys hit the S^2 grid)
+    salt_buckets: int = 8       # salted self-join grid for hot keys in
+                                # candidate_pairs_with_drops
+    hot_key_threshold: int = 64      # ids per key above which a key is hot:
+                                     # salted in candidate_pairs_with_drops,
+                                     # listed in the fused pair stage's key log
     mega_key_threshold: int = 512    # ids per key above which quadratic pairing
                                      # stops: switch to sorted-neighborhood
                                      # chaining (linear pairs, CC closes the
@@ -58,7 +58,6 @@ class LinkageConfig:
 
     # --- misc ---
     seed: int = 42
-    extra: dict = field(default_factory=dict)
 
     @classmethod
     def at_scale(cls, **overrides) -> "LinkageConfig":

@@ -23,14 +23,13 @@ earlier.
 Round-6 execution strategy (semantics unchanged — exact CC, component = min
 member id — only the schedule differs):
 
-  - A canonical edge set that fits ONE bounded task (<= local_finish_max_edges,
-    default 1M edges ~ 16 MB of long pairs / ~130 MB of sha-string pairs) is
+  - A canonical edge set that fits ONE bounded task (<= CC_LOCAL_FINISH_MAX_EDGES,
+    1M edges ~ 16 MB of long pairs / ~130 MB of sha-string pairs) is
     finished by a single-task union-find (`_local_star_edges`): measured at the
     600k-row bench, the star rounds spent 7 x ~3.3 s of stage latency fixing
     ~60 straggler edges after round 1 had already collapsed 555k edges to 129k.
-    The bound is explicit and env-tunable (BELA_CC_LOCAL_FINISH_MAX_EDGES) —
-    above it, distributed rounds proceed exactly as before, so the hybrid is
-    scale-adaptive, not a local[32] tune.
+    The bound is explicit — above it, distributed rounds proceed exactly as
+    before, so the hybrid is scale-adaptive, not a local[32] tune.
   - The no-checkpoint path runs its rounds over dense surrogate LONG ids and
     splits SETTLED stars (components already in final, disconnected form) out
     of the frontier each round, so later rounds shuffle only the unconverged
@@ -70,10 +69,8 @@ class CCResult:
 # ~16 MB of long pairs (~130 MB of sha-string pairs) — comfortably one task's
 # memory at any executor size this engine targets, while the win it buys is
 # the elimination of O(log diameter) rounds x ~10 scheduled stages each.
-# Env-tunable for clusters with smaller executors (or 0 to disable).
-CC_LOCAL_FINISH_MAX_EDGES = int(
-    os.environ.get("BELA_CC_LOCAL_FINISH_MAX_EDGES", str(1_000_000))
-)
+# 0 disables the local finish.
+CC_LOCAL_FINISH_MAX_EDGES = 1_000_000
 
 
 def _local_star_edges(cur: DataFrame) -> DataFrame:
@@ -364,7 +361,6 @@ def connected_components(
     max_rounds: int = 25,
     checkpoint_dir: str | None = None,
     resume: bool = True,
-    local_finish_max_edges: int | None = None,
 ) -> CCResult:
     """(id1, id2) edge set -> (rid, component) with component = min member id.
 
@@ -380,13 +376,9 @@ def connected_components(
     ~17s, OPTIMIZATION_r06.md). The checkpointed path keeps the caller's ids
     on disk so round parquet + manifests stay directly resumable/auditable.
     """
+    lim = CC_LOCAL_FINISH_MAX_EDGES
     if checkpoint_dir is None:
-        return _connected_components_local(edges, max_rounds, local_finish_max_edges)
-    lim = (
-        CC_LOCAL_FINISH_MAX_EDGES
-        if local_finish_max_edges is None
-        else local_finish_max_edges
-    )
+        return _connected_components_local(edges, max_rounds, lim)
     spark = edges.sparkSession
     cur = _canonical(edges)
     start_round = 0
@@ -487,16 +479,15 @@ def _star_assignments(cur: DataFrame) -> DataFrame:
     )
 
 
-def _connected_components_local(
-    edges: DataFrame, max_rounds: int, local_finish_max_edges: int | None = None
-) -> CCResult:
+def _connected_components_local(edges: DataFrame, max_rounds: int, lim: int) -> CCResult:
     """The no-checkpoint CC path.
 
     1. If the canonical input fits the local-finish bound, one union-find
        task produces the final star forest directly — zero star rounds.
     2. Otherwise the star rounds run over dense surrogate LONG ids, each
        round splits settled stars out of the frontier (_split_stable), and
-       the union-find finishes the frontier the moment it fits the bound.
+       the union-find finishes the frontier the moment it fits the bound
+       (`lim`, the caller's CC_LOCAL_FINISH_MAX_EDGES).
 
     The surrogate mapping is monotonically_increasing_id over the distinct
     node set, localCheckpointed so it is assigned exactly once and frozen
@@ -512,11 +503,6 @@ def _connected_components_local(
     size-estimate-broadcast (the 16M-row AQE compressed-size failure mode,
     see pipeline.run_linkage) and there is no bounded build side to hash.
     """
-    lim = (
-        CC_LOCAL_FINISH_MAX_EDGES
-        if local_finish_max_edges is None
-        else local_finish_max_edges
-    )
     cuts: list[DataFrame] = []
 
     def cut(df: DataFrame) -> DataFrame:

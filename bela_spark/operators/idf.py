@@ -33,8 +33,6 @@ maps. All linear in corpus token volume; nothing here touches pairs.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, functions as F
 
 # Vocabulary-size bound for the broadcast-weighting fast path of
@@ -43,10 +41,8 @@ from pyspark.sql import DataFrame, functions as F
 # default bound is ~128 MB of driver/broadcast memory) and the weighting runs
 # as a NARROW Arrow kernel; above it the legacy join DAG runs unchanged, so
 # the path is scale-adaptive, not a local tune (same gating discipline as
-# BELA_CC_LOCAL_FINISH_MAX_EDGES). 0 disables the fast path entirely.
-IDF_BROADCAST_MAX_TOKENS = int(
-    os.environ.get("BELA_IDF_BROADCAST_MAX_TOKENS", str(8_000_000))
-)
+# cc.CC_LOCAL_FINISH_MAX_EDGES). 0 disables the fast path entirely.
+IDF_BROADCAST_MAX_TOKENS = 8_000_000
 
 
 def _exploded_weights(df: DataFrame, id_col: str, token_col: str) -> DataFrame:
@@ -378,11 +374,16 @@ def weighted_jaccard_packed_ix_staged(
     ix: str = "_ix",
     wi: str = "_wi",
 ):
-    """(size_bound, ix_expr, wi_expr, wjac_expr): the packed kernel of
-    weighted_jaccard_packed_cols split into three projections, so the pair
-    hot path computes the intersection and its weight sum ONCE per pair.
+    """(size_bound, ix_expr, wi_expr, wjac_expr): the weighted-jaccard
+    kernel over two weight_tokens_packed sides, split into three projections
+    so the pair hot path computes the intersection and its weight sum ONCE
+    per pair. Values are bit-identical to weighted_jaccard_cols over
+    weight_tokens sides (same integer weights, same one final double
+    division): injective packing makes array_intersect over packed longs
+    exactly the token-set intersection, and each weight is the low 6 bits of
+    a packed value.
 
-    Why split at all: in the one-shot form the intersection aggregate
+    Why split at all: in a one-shot form the intersection aggregate
     appears in the zero-union test, the numerator AND the denominator, and
     because the HOF aggregate is CodegenFallback each occurrence is
     interpreted separately (3x the per-pair kernel cost, measured as the 80s+
@@ -411,9 +412,8 @@ def weighted_jaccard_packed_ix_staged(
 
     Contract: project `ix_expr` gated as column `ix` (null when gated off),
     drop t1/t2, project `wi_expr` as `wi`, then apply `wjac_expr` (reads
-    `wi`). Values are bit-identical to the one-shot form: same integer
-    weight sums, same single double division, null/empty semantics preserved
-    (gated-off -> null wi; empty intersection -> 0)."""
+    `wi`). Null/empty semantics: gated-off -> null wi; empty intersection
+    -> 0."""
     ws1, ws2 = F.col(s1), F.col(s2)
     size_bound = F.when(F.greatest(ws1, ws2) == 0, F.lit(1.0)).otherwise(
         F.least(ws1, ws2) / F.greatest(ws1, ws2).cast("double")
@@ -437,31 +437,3 @@ def weighted_jaccard_packed_ix_staged(
     wjac_expr = F.when(wu <= 0, F.lit(1.0)).otherwise(wic / wu.cast("double"))
     return size_bound, ix_expr, wi_expr, wjac_expr
 
-
-def weighted_jaccard_packed_cols(
-    t1: str = "t1", t2: str = "t2", s1: str = "s1", s2: str = "s2"
-):
-    """(size_bound, wjac) over two weight_tokens_packed sides — numerically
-    identical to weighted_jaccard_cols (same integer weights, same one final
-    double division), restructured for the pair hot path: the token match
-    runs through the native array_intersect (packed longs compare as plain
-    longs inside whole-stage codegen; injective packing makes it exactly the
-    token-set intersection), and the only interpreted HOF is the weight
-    unpack-and-sum over the INTERSECTION — typically a handful of elements —
-    instead of a per-pair map build plus a probe per left token.
-
-    One-shot single-expression form (the intersection aggregate appears 3x in
-    the expression tree): fine for tests and one-off queries; the pair hot
-    path uses weighted_jaccard_packed_ix_staged, which evaluates it once."""
-    ws1, ws2 = F.col(s1), F.col(s2)
-    size_bound = F.when(F.greatest(ws1, ws2) == 0, F.lit(1.0)).otherwise(
-        F.least(ws1, ws2) / F.greatest(ws1, ws2).cast("double")
-    )
-    wi = F.aggregate(
-        F.array_intersect(F.col(t1), F.col(t2)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + F.pmod(x, F.lit(64)),
-    )
-    wu = ws1 + ws2 - wi
-    wjac = F.when(wu <= 0, F.lit(1.0)).otherwise(wi / wu.cast("double"))
-    return size_bound, wjac

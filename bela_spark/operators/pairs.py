@@ -23,7 +23,6 @@ hot/cold branch so the expensive key-generation DAG runs exactly once.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
@@ -79,11 +78,9 @@ RANGE_CHUNK_TARGET_ROWS = 10_000
 # made from a MEASURED count (never a size estimate — the r5 compressed-size
 # broadcast failure mode cannot recur), and above the bound the pinned
 # shuffle-hash join runs unchanged. 2M keys ~ 120-200 MB of broadcast hash
-# table, comfortably inside the session's 24g driver; env-tunable like the
-# other scale bounds, 0 disables the broadcast path.
-COUNTS_BROADCAST_MAX_KEYS = int(
-    os.environ.get("BELA_COUNTS_BROADCAST_MAX_KEYS", str(2_000_000))
-)
+# table, comfortably inside the session's 24g driver; 0 disables the
+# broadcast path.
+COUNTS_BROADCAST_MAX_KEYS = 2_000_000
 
 
 def _lex_ge(cols: Sequence[str], vals: Sequence) -> Column:

@@ -11,23 +11,7 @@ built-ins under whole-stage codegen, and the optional cosine runs JVM-side
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, functions as F
-
-# Member floor below which a hot key skips the S^2 salt grid and pairs in the
-# plain equi-join (r6): a key bounded at n members emits at most C(n, 2)
-# pairs in ONE task — at the default 2048 that is ~2M pair-emits, a
-# fine-grained unit of work at any executor size — while the grid pays S^2
-# row replication of BOTH sides for every salted key. Keys above the floor
-# (only possible when mega_key_threshold exceeds it) still take the grid, so
-# the skew protection is intact where a single key could actually swamp a
-# task; the gate is a pure execution-strategy choice (the grid provably
-# emits the identical pair set) and the key_log strategy labels, which
-# depend on the config thresholds alone, do not move. Env-tunable like the
-# other scale bounds (0 restores unconditional salting above
-# hot_key_threshold).
-SALT_MIN_KEY_MEMBERS = int(os.environ.get("BELA_SALT_MIN_KEY_MEMBERS", "2048"))
 
 from bela_spark.config import LinkageConfig
 from bela_spark.functions.strings import lev_sim
@@ -140,40 +124,37 @@ def _score_exprs(df: DataFrame, cfg: LinkageConfig, use_cosine: bool) -> DataFra
 
 
 def fused_block_and_score(
-    keys_with_features: DataFrame,
+    keyed: DataFrame,
     cfg: LinkageConfig,
     id_col: str = "rid",
     use_cosine: bool = False,
-    persist: bool = True,
-    counts_attached: bool = False,
     max_kn: int | None = None,
     mega_rows: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """The at-scale pair stage: score INSIDE the blocking-key self-join.
 
-    Input: (rid, key, norm, tokens[, embedding]) — features ride along with
-    the key rows, so the self-join emits fully-featured pairs and the scoring
-    projection runs in the SAME stage; only (id1, id2, key, features, score)
-    ever crosses a stage boundary. This removes the two pair-sized feature
-    joins, whose shuffle payload (norm strings x n_pairs) is what breaks
-    disk-bound scaling — cf. the reference computing pair scores inside the
-    retrieval batch rather than re-gathering embeddings per pair
-    (bela/task/joint_el_task.py:658-712).
+    Input: (rid, key, _kn, norm, tokens[, ws][, embedding]) — `_kn` is the
+    key's cardinality, attached by the caller (pairs.keyed_with_counts, or
+    run_linkage's counts gate); features ride along with the key rows, so
+    the self-join emits fully-featured pairs and the scoring projection runs
+    in the SAME stage; only (id1, id2, key, features, score) ever crosses a
+    stage boundary. This removes the two pair-sized feature joins, whose
+    shuffle payload (norm strings x n_pairs) is what breaks disk-bound
+    scaling — cf. the reference computing pair scores inside the retrieval
+    batch rather than re-gathering embeddings per pair
+    (bela/task/joint_el_task.py:658-712). The input is read by every tier
+    branch and the key log, so a caller whose input DAG is expensive should
+    cut or persist it (run_linkage cuts it with localCheckpoint).
 
     A pair colliding under k blocking keys is scored k times (k <= number of
     key families + bands); that duplicate CPU is the explicit price for not
     shuffling pair-sized feature payloads — CPU scales with cores, shuffle
     disk does not.
 
-    Key-cardinality strategy (all logged in key_log, never silent):
-      n <= hot_key_threshold           plain equi-join (quadratic, exact)
-      hot < n <= mega_key_threshold    salted S^2 grid join (quadratic, exact,
-                                       skew shattered across S^2 tasks) — but
-                                       only for keys above SALT_MIN_KEY_MEMBERS;
-                                       smaller "hot" keys are bounded enough
-                                       for one plain-join task and skip the
-                                       grid's S^2 row replication (identical
-                                       pair set; labels unchanged)
+    Key-cardinality strategy:
+      2 <= n <= mega_key_threshold     plain equi-join (quadratic, exact; a
+                                       key bounded at n members emits at most
+                                       C(n, 2) pairs in one task)
       n > mega_key_threshold           sorted-neighborhood chaining: each
                                        member pairs with its next chain_window
                                        neighbors (linear). An uninformative
@@ -183,49 +164,25 @@ def fused_block_and_score(
 
     Tier planning: `max_kn` is the largest `_kn` of the input when the
     caller measured it (run_linkage's counts gate does, in the same
-    aggregate that sizes its broadcast). A tier whose lower bound is at or
-    above it cannot hold a row, so it is neither built nor planned nor run —
-    in particular the chained tier's range-boundary jobs go. `mega_rows`,
-    the chained tier's row total (sum of `_kn` over keys above
-    mega_key_threshold), spares ranked_in_key its count job. With
-    max_kn=None every tier is built, as every caller without the
-    measurement needs; the rows are identical either way.
+    aggregate that sizes its broadcast). When no key is above
+    mega_key_threshold the chained tier is neither built nor planned nor
+    run — its range-boundary jobs go with it. `mega_rows`, the chained
+    tier's row total (sum of `_kn` over keys above mega_key_threshold),
+    spares ranked_in_key its count job. With max_kn=None both tiers are
+    built; the rows are identical either way.
 
     Returns (scored_by_key, key_log). key_log: (key, n_ids, strategy) for
-    every salted or chained key. Dedup to unique pairs happens after the
-    cheap threshold filter (accept_edges) or via dedup_scored().
+    every key above hot_key_threshold, strategy being the tier that paired
+    it ("plain" or "chained") — never silent. Dedup to unique pairs happens
+    after the cheap threshold filter (accept_edges) or via dedup_scored().
     """
-    from bela_spark.operators.pairs import keyed_with_counts, ranked_in_key
+    from bela_spark.operators.pairs import ranked_in_key
 
     feat_cols = (
         ["norm", "tokens"]
         + (["ws"] if cfg.idf_weighting else [])
         + (["embedding"] if use_cosine else [])
     )
-    # cardinality via groupBy + shuffle-hash join (keyed_with_counts): the old
-    # count-window buffered each key's whole membership in one task — the
-    # 10^8-member near-dup family would be a single-task straggler. The join
-    # has two branches over the input (counts + probe), so callers whose
-    # key-gen DAG is expensive should cut or persist the input themselves
-    # and free it when the run is done (run_linkage cuts it with
-    # localCheckpoint, LinkageRun.keys_features, freed by
-    # LinkageRun.release) — an unconditional persist here would be an
-    # unreleasable second cache of the pair stage for the life of the
-    # session.
-    #
-    # counts_attached=True: the caller already carries `_kn` on the input
-    # (run_linkage r6: counts are aggregated over the SLIM (rid, key) frame
-    # BEFORE the feature join — the key-gen/feature join is 1:1 per rid, so
-    # the per-key cardinalities are identical — and the joined frame is the
-    # caller's ONE materialized frame). Skips both the wide-row counts join
-    # and the duplicate internal persist that double-cached the pair-stage
-    # input.
-    if counts_attached:
-        keyed = keys_with_features
-    else:
-        keyed = keyed_with_counts(keys_with_features)
-        if persist:
-            keyed = keyed.persist()
 
     key_log = (
         keyed.filter(F.col("_kn") > cfg.hot_key_threshold)
@@ -235,7 +192,7 @@ def fused_block_and_score(
             "key",
             "n_ids",
             F.when(F.col("n_ids") > cfg.mega_key_threshold, F.lit("chained"))
-            .otherwise(F.lit("salted"))
+            .otherwise(F.lit("plain"))
             .alias("strategy"),
         )
     )
@@ -248,37 +205,25 @@ def fused_block_and_score(
         ]
         return df.select("key", *cols, *extra)
 
-    # Pair-emitting joins are CPU-dense, not byte-dense: a ~50 MB salted-grid
-    # cell expands into millions of scored pairs, so AQE's byte-based
-    # partition coalescing (advisoryPartitionSizeInBytes) merges them into a
-    # handful of straggler tasks — measured at 2M rows: 75% of the pair-stage
-    # CPU in 4 of 20 tasks (68-84s each vs a 12s median), a floor no core
-    # count fixes. A user repartition on the exact join keys pins the join's
+    # Pair-emitting joins are CPU-dense, not byte-dense: a few MB of key rows
+    # expand into millions of scored pairs, so AQE's byte-based partition
+    # coalescing (advisoryPartitionSizeInBytes) merges them into a handful
+    # of straggler tasks — measured at 2M rows: 75% of the pair-stage CPU in
+    # 4 of 20 tasks (68-84s each vs a 12s median), a floor no core count
+    # fixes. A user repartition on the exact join keys pins the join's
     # partitioning (AQE never coalesces REPARTITION_BY_NUM stages, and the
     # other join side must align), so the quadratic work spreads over the
     # full shuffle-partition count regardless of how few bytes carry it.
     # Spark reuses the repartition exchange for the join — same shuffle
     # count as before, only the coalescing behavior changes.
-    n_pair_parts = int(
-        keys_with_features.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
+    n_pair_parts = int(keyed.sparkSession.conf.get("spark.sql.shuffle.partitions"))
 
     # _kn = 1 keys (the vast majority under selective blocking) cannot emit a
-    # pair — drop them before the join so they never shuffle.
-    # salt_floor: keys at or below it pair in the plain equi-join even when
-    # the config labels them hot (see SALT_MIN_KEY_MEMBERS — with the default
-    # thresholds mega < floor, so the grid tier vanishes from the plan
-    # entirely and its S^2 replication with it)
-    salt_floor = max(cfg.hot_key_threshold, SALT_MIN_KEY_MEMBERS)
-    cold_hi = min(salt_floor, cfg.mega_key_threshold)
-    cold = keyed.filter((F.col("_kn") >= 2) & (F.col("_kn") <= cold_hi))
-
-    def can_hold(lower: int) -> bool:
-        """Whether a tier of keys with _kn > lower can hold a row."""
-        return max_kn is None or max_kn > lower
-
-    salt_tier_live = salt_floor < cfg.mega_key_threshold and can_hold(salt_floor)
-    mega_tier_live = can_hold(cfg.mega_key_threshold)
+    # pair — drop them before the join so they never shuffle
+    cold = keyed.filter(
+        (F.col("_kn") >= 2) & (F.col("_kn") <= cfg.mega_key_threshold)
+    )
+    mega_tier_live = max_kn is None or max_kn > cfg.mega_key_threshold
 
     # the tier self-joins carry row-proportional sides: hint("merge") pins
     # the sort-merge shape the scaling work measured (SCALING.json) AND
@@ -291,29 +236,6 @@ def fused_block_and_score(
         .join(side(cold, 2).hint("merge"), "key")
         .filter(F.col("id1") < F.col("id2"))
     )
-
-    if salt_tier_live:
-        hot = keyed.filter(
-            (F.col("_kn") > salt_floor) & (F.col("_kn") <= cfg.mega_key_threshold)
-        )
-        s = cfg.salt_buckets
-        salted = hot.withColumn("_salt", F.pmod(F.xxhash64(id_col), F.lit(s)))
-        left = salted.withColumn(
-            "_s2", F.explode(F.sequence(F.lit(0), F.lit(s - 1)))
-        ).withColumnRenamed("_salt", "_s1")
-        right = salted.withColumn(
-            "_s1", F.explode(F.sequence(F.lit(0), F.lit(s - 1)))
-        ).withColumnRenamed("_salt", "_s2")
-        hot_pairs = (
-            side(left, 1, extra=("_s1", "_s2"))
-            .repartition(n_pair_parts, "key", "_s1", "_s2")
-            .join(
-                side(right, 2, extra=("_s1", "_s2")).hint("merge"),
-                ["key", "_s1", "_s2"],
-            )
-            .filter(F.col("id1") < F.col("id2"))
-            .drop("_s1", "_s2")
-        )
 
     # chaining (sorted-neighborhood, Hernandez-Stolfo): member at chain rank
     # r pairs with ranks r+1..r+w. The chain is ordered by CONTENT (norm,
@@ -331,6 +253,7 @@ def fused_block_and_score(
         # F.sequence(_cn+1, _cn+0) would default to step -1 and emit a
         # self-pair per member — chaining cannot be "off", only bounded
         raise ValueError(f"chain_window must be >= 1, got {w}")
+    pair_feat = cold_pairs
     if mega_tier_live:
         mega = ranked_in_key(
             keyed.filter(F.col("_kn") > cfg.mega_key_threshold),
@@ -353,11 +276,6 @@ def fused_block_and_score(
             )
             .drop("_cn2")
         )
-
-    pair_feat = cold_pairs
-    if salt_tier_live:
-        pair_feat = pair_feat.unionByName(hot_pairs)
-    if mega_tier_live:
         pair_feat = pair_feat.unionByName(mega_pairs)
     scored = _score_exprs(pair_feat, cfg, use_cosine)
     # content-ordered chaining no longer guarantees id1 < id2 — canonicalize

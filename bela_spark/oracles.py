@@ -500,7 +500,7 @@ def oracle_sql() -> dict[str, str]:
         "er_candidate_pairs": f"WITH {_PAIRS} "
         + "SELECT id1, id2, key FROM cpairs",
         # chained tier (hot=2, mega=3, w=2): keys with 2..3 members pair
-        # fully (salt grid == full pairing); keys above 3 chain — rank by
+        # fully in the plain equi-join; keys above 3 chain — rank by
         # (64-char norm prefix, doc_id), rank r pairs with r+1..r+2. The
         # row_number window here is the single-window reference form of the
         # engine's two-phase range-partitioned rank.

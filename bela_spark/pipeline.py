@@ -2,10 +2,12 @@
 
 One continuous DataFrame DAG:
   read -> normalize + sha256 -> blocking keys (MinHash-LSH + prefix)
-       -> per-key caps + salted pair join -> pairwise scoring -> threshold
+       -> key counts + feature join -> fused pair join + scoring (plain
+          equi-join up to mega_key_threshold members, sorted-neighborhood
+          chain above) -> threshold
        -> large-star/small-star clustering -> cluster assignment -> stats/F1
 
-Shuffles: blocking-key aggregation, pair join, feature joins, CC rounds —
+Shuffles: blocking-key aggregation, feature join, pair join, CC rounds —
 everything else is narrow and pipelined by Catalyst. Single collect() only in
 evaluation helpers.
 """
@@ -35,7 +37,9 @@ class LinkageRun:
     records: DataFrame        # rid, content_sha, norm, tokens, (embedding), input cols
     keys: DataFrame           # rid, key, _kn — pair-eligible key rows only
                               # (_kn >= 2; a singleton key cannot emit a pair)
-    key_drops: DataFrame      # key, n_ids, n_dropped (never silent truncation)
+    key_drops: DataFrame      # key, n_ids, strategy: every key above
+                              # hot_key_threshold and the tier that paired it
+                              # ("plain" or "chained") — never silent
     pairs: DataFrame          # id1, id2, key
     scored_by_key: DataFrame  # id1, id2, key, features..., score (per blocking key)
     scored: DataFrame         # id1, id2, features..., score (unique pairs)
@@ -196,10 +200,8 @@ def run_linkage(
     # (pair_stage_features emits exactly one row per base record), so the
     # per-key counts are identical to counting after the join — but the
     # counts shuffle + shuffle-hash probe now carry ~100 B/row instead of the
-    # full feature payload, and fused_block_and_score no longer needs its own
-    # counts join + internal persist: ONE materialized frame (the cut
-    # pair-stage input below) feeds the whole pair stage instead of two
-    # near-identical wide caches (guide §2.3).
+    # full feature payload, and ONE materialized frame (the cut pair-stage
+    # input below) feeds the whole pair stage (guide §2.3).
     # min_count=2: a _kn = 1 key cannot emit a pair, and under selective
     # blocking ~78% of key rows are singletons — every downstream consumer
     # (tier filters, key log, boundaries) either filters _kn >= 2 itself or
@@ -215,8 +217,8 @@ def run_linkage(
         # at 600k records), and broadcasting it lets the 2.45M-row probe side
         # flow narrow into the join instead of shuffling. ONE aggregate over
         # the cached counts measures the key count (exact, never a size
-        # estimate), the largest key (which tiers of fused_block_and_score
-        # can hold a row) and the chained tier's row total (its rank
+        # estimate), the largest key (whether fused_block_and_score's chained
+        # tier can hold a row) and the chained tier's row total (its rank
         # boundaries); above the bound the pinned shuffle-hash join runs.
         multi = (
             keys_slim.groupBy("key")
@@ -263,8 +265,6 @@ def run_linkage(
         keys_with_features,
         cfg,
         use_cosine=use_embeddings,
-        persist=persist,
-        counts_attached=True,
         max_kn=max_kn,
         mega_rows=mega_rows,
     )

@@ -142,14 +142,14 @@ def er_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist serializes the DAG behind a cache-build barrier (7.4s vs 9.4s
     # mean flagship). er_chained_pairs is the opposite case — its lowered
     # thresholds trigger eager boundary jobs per consumer, and there the
-    # internal persist wins 3/3 (see that query).
+    # persist wins 3/3 (see that query).
     keys = _all_keys(spark, sf_dir)
     pairs, _ = candidate_pairs_with_drops(keys, CFG, id_col="doc_id", persist=False)
     return pairs.select("id1", "id2", "key").distinct()
 
 
 def er_chained_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J3 chained tier, oracle-exposed: the production three-tier pair stage
+    """J3 chained tier, oracle-exposed: the production two-tier pair stage
     with thresholds lowered (hot=2, mega=3, w=2) so the sorted-neighborhood
     chain ENGAGES at every driver scale (the biggest documents-table key has
     4-5 members at sf0.001/0.01) — at the default thresholds no key is big
@@ -160,10 +160,11 @@ def er_chained_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     r pairs with ranks r+1..r+w; ids canonicalize least/greatest. With w=2 a
     4-member chain emits 5 of the 6 full pairs, so the oracle DISTINGUISHES
     chaining from full pairing. Keys at or below the mega threshold pair
-    fully (the salt grid never changes the pair set). The DuckDB twin
+    fully in the plain equi-join. The DuckDB twin
     replays the rank as a row_number window, so every rank the two-phase
     implementation assigns is value-checked against the single-window
     form."""
+    from bela_spark.operators.pairs import keyed_with_counts
     from bela_spark.operators.scoring import fused_block_and_score
 
     cfg = LinkageConfig(hot_key_threshold=2, mega_key_threshold=3, chain_window=2)
@@ -174,13 +175,14 @@ def er_chained_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array_distinct("tokens").alias("tokens"),
     )
     kwf = keys.join(recs, "doc_id")
-    # persist=True, MEASURED (r6 interleaved A/B, 3/3 rounds: 9.5s vs 13.5s
+    # persisted, MEASURED (r6 interleaved A/B, 3/3 rounds: 9.5s vs 13.5s
     # mean): the lowered thresholds send most keys to the mega tier, whose
     # two-phase rank runs EAGER boundary jobs — each a separate job that
     # would re-execute the minhash key-gen + record join without the
-    # internal persist. Contrast er_candidate_pairs, where no mega tier
-    # engages and the persist barrier measured slower.
-    scored, _ = fused_block_and_score(kwf, cfg, id_col="doc_id", persist=True)
+    # persist. Contrast er_candidate_pairs, where no mega tier engages and
+    # the persist barrier measured slower.
+    keyed = keyed_with_counts(kwf).persist()
+    scored, _ = fused_block_and_score(keyed, cfg, id_col="doc_id")
     return scored.select("id1", "id2", "key").distinct()
 
 

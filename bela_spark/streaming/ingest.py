@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from bela_spark.config import LinkageConfig
 from bela_spark.operators.blocking import blocking_keys
 from bela_spark.operators.cc import connected_components
+from bela_spark.operators.pairs import keyed_with_counts
 from bela_spark.operators.scoring import fused_block_and_score
 from bela_spark.pipeline import prepare_records
 
@@ -168,7 +169,7 @@ class IncrementalLinkage:
             ),
             "rid",
         ).localCheckpoint()
-        scored_by_key, _ = fused_block_and_score(kwf, cfg, persist=False)
+        scored_by_key, _ = fused_block_and_score(keyed_with_counts(kwf), cfg)
         # checkpoint: new_edges feeds the edge log, the incremental-CC touched
         # set AND the cluster table — without this the fused scoring DAG (the
         # batch's most expensive stage) re-executes per consumer

@@ -5,7 +5,7 @@ local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
 
 The linkage benchmark synthesizes the north-rule repo_files table at a size
 proportional to sf (6M rows/sf unit -> 600k at sf=0.1) and runs the full
-blocking -> salted pairs -> scoring -> clustering pipeline with exact-content
+blocking -> fused pair join + scoring -> clustering pipeline with exact-content
 collapse (the at-scale configuration). pairs_per_sec is scored candidate
 pairs per second — the BASELINE.json throughput metric.
 """
@@ -99,10 +99,11 @@ def main() -> None:
         run = run_linkage(df, LinkageConfig.at_scale(), collapse_exact=True)
         n_pairs = run.scored.count()
         n_clusters = run.clusters.select("cluster_id").distinct().count()
-        # tier-switch visibility (VERDICT r3 stretch): how many keys took the
-        # salted-grid vs the anti-quadratic chained path this round — at 600k
-        # (sf0.1) ~150 keys chain; at BELA_BENCH_ROWS=4000000 the chained
-        # regime dominates (the full 4M variant is the BASELINE.md evidence)
+        # tier-switch visibility (VERDICT r3 stretch): how many hot keys
+        # (above hot_key_threshold) paired in the plain equi-join vs the
+        # anti-quadratic chained path this round — at 600k (sf0.1) 113 keys
+        # chain; at BELA_BENCH_ROWS=4000000 the chained regime dominates (the
+        # full 4M variant is the BASELINE.md evidence)
         strat = {
             r["strategy"]: r["n"]
             for r in run.key_drops.groupBy("strategy")
@@ -112,7 +113,7 @@ def main() -> None:
         extras["n_records"] = n_linkage
         extras["n_scored_pairs"] = n_pairs
         extras["n_clusters"] = n_clusters
-        extras["n_salted_keys"] = strat.get("salted", 0)
+        extras["n_hot_plain_keys"] = strat.get("plain", 0)
         extras["n_chained_keys"] = strat.get("chained", 0)
         # the LAST pass's run stays alive so the F1 gate below can reuse its
         # scored/pairs; an earlier pass's run is released here
@@ -127,8 +128,8 @@ def main() -> None:
     # UNTIMED pairwise-F1 gate at bench scale: the pytest gate runs at 800
     # rows where the chained tier never engages; this one scores the SAME
     # metric (micro F1 of score>=threshold vs planted truth over candidate
-    # pairs) on the full 600k bench input — the scale where all three key
-    # tiers (cold/salted/chained) are live — and rides the last timed pass's
+    # pairs) on the full 600k bench input — the scale where both key tiers
+    # (plain/chained) are live — and rides the last timed pass's
     # still-persisted frames, so it costs one label join, not a re-run.
     from bela_spark.fixtures import synth_repo_files as _synth_truth
     from bela_spark.pipeline import label_pairs, pairwise_f1
@@ -152,9 +153,10 @@ def main() -> None:
     # timed as its own driver-visible row. Same forcing trick the oracle
     # queries use (er_chained_pairs): mega_key_threshold == hot_key_threshold
     # sends EVERY >hot key down the chain path on the same 600k input, so the
-    # row times chain ranking + scoring + CC with zero salted keys, at bench
-    # scale, every round. Counts are reported separately (the pair set is
-    # linear-emission by design, smaller than the headline's quadratic tiers).
+    # row times chain ranking + scoring + CC with no hot key paired
+    # quadratically, at bench scale, every round. Counts are reported
+    # separately (the pair set is linear-emission by design, smaller than
+    # the headline's quadratic tier).
     chained_cfg = LinkageConfig.at_scale(
         mega_key_threshold=LinkageConfig().hot_key_threshold
     )
@@ -174,7 +176,6 @@ def main() -> None:
         extras["chained_n_scored_pairs"] = n_pairs_c
         extras["chained_n_clusters"] = n_clusters_c
         extras["chained_n_chained_keys"] = strat.get("chained", 0)
-        extras["chained_n_salted_keys"] = strat.get("salted", 0)
         run.release()
         return n_pairs_c
 

@@ -10,7 +10,7 @@ throughput (scored pairs/sec) at both plus
 Each parallelism level runs in its own subprocess (fresh JVM — no cross-run
 JIT or cache contamination). shuffle.partitions scales with cores (2x), the
 same tuning a cluster deployment would use. The timed segment is the
-blocking -> salted pair join -> scoring DAG, materialized by scored.count();
+blocking -> key counts -> pair join -> scoring DAG, materialized by an aggregate;
 input synthesis and session startup are excluded (they are one-time costs,
 and record synthesis is itself measured separately as a sanity line).
 
@@ -38,6 +38,7 @@ def worker(cpus: int, rows: int) -> None:
     from bela_spark.config import LinkageConfig
     from bela_spark.fixtures import synth_repo_files
     from bela_spark.operators.blocking import blocking_keys
+    from bela_spark.operators.pairs import keyed_with_counts
     from bela_spark.operators.scoring import fused_block_and_score
     from bela_spark.pipeline import pair_stage_features, prepare_records
     from bela_spark.session import get_spark
@@ -58,8 +59,8 @@ def worker(cpus: int, rows: int) -> None:
     # does; without it the measurement under-reports cluster scaling.
     os.environ.setdefault("BELA_SPARK_DRIVER_MEM", "48g")
     # AQE OFF for the pair-stage job: every pair-stage shuffle is already
-    # explicitly partitioned (pinned repartition on the join keys in all
-    # three tiers, salting for skew), so adaptive re-planning contributes
+    # explicitly partitioned (pinned repartition on the join keys in both
+    # tiers, chaining for mega keys), so adaptive re-planning contributes
     # nothing here — but it inserts a full materialization barrier at every
     # query stage, serializing the DAG's independent branches. Measured at
     # 2M rows / 16 threads (BASELINE.md "Round-5 scaling measurement",
@@ -84,8 +85,10 @@ def worker(cpus: int, rows: int) -> None:
     )
     def block_and_score(base_df, persist):
         keys = blocking_keys(base_df, cfg)
-        kwf = keys.join(pair_stage_features(base_df, cfg), "rid")
-        return fused_block_and_score(kwf, cfg, persist=persist)
+        kwf = keyed_with_counts(keys.join(pair_stage_features(base_df, cfg), "rid"))
+        if persist:
+            kwf = kwf.persist()
+        return fused_block_and_score(kwf, cfg)
 
     # warm the JVM/codegen paths on a small slice so the timed run measures
     # steady-state throughput, not first-query JIT
@@ -103,7 +106,7 @@ def worker(cpus: int, rows: int) -> None:
     base = records.filter(F.col("rid") == F.col("rep"))
     t_synth = time.time() - t0
 
-    # timed segment: salted/chained pair join + pairwise scoring over the
+    # timed segment: plain/chained pair join + pairwise scoring over the
     # key-partitioned input. The DAG is built ONCE (py4j expression
     # construction is driver-serial, a per-job one-time cost on a real
     # cluster); pass 0 warms plan compilation and materializes the persisted

@@ -19,7 +19,9 @@ pipeline-semantic confs (AQE, Arrow) are set, and only as defaults.
 
 Outputs under --output:
     clusters/        parquet: every input row + cluster_id (partitioned by lang)
-    key_drops/       parquet: the never-silent blocking-key truncation log
+    key_drops/       parquet: the never-silent key log — every key above
+                     hot_key_threshold with its size and pair strategy
+                     (key, n_ids, strategy: "plain" or "chained")
     metrics.json     row/pair/cluster counts + top cluster sizes (driver-small)
 """
 

@@ -5,8 +5,7 @@ spark.sql.adaptive.enabled=false (the pipeline pins every pair-stage
 shuffle's partitioning, so AQE only adds per-query-stage materialization
 barriers — measured 25% wall tax at 16 threads, BASELINE.md "Round-5 scaling
 measurement"). That is only sound if results are bit-identical either way;
-this test pins it at a scale where all three key tiers (cold / salted /
-chained) engage,
+this test pins it at a scale where both key tiers (plain / chained) engage,
 guarding against any future operator re-introducing plan-dependent values
 (the spark_partition_id chunk-id divergence of round 4 was exactly such a
 bug, caught at 600k rows only).
@@ -23,7 +22,7 @@ def _signature(spark, df_rows):
     """(pair count, score digest, cluster digest) for one linkage run."""
     run = run_linkage(
         synth_repo_files(spark, df_rows, seed=42),
-        # tiny tier thresholds force salted AND chained keys at fixture scale
+        # tiny tier thresholds force hot plain AND chained keys at fixture scale
         LinkageConfig.at_scale(hot_key_threshold=6, mega_key_threshold=24),
         collapse_exact=True,
     )

@@ -111,6 +111,7 @@ def test_chained_pairs_identity_vs_window_form(spark):
     """The chained tier's emitted pair IDENTITIES (not just counts) must match
     the reference single-window form: sort the mega key by (norm, id), pair
     rank r with ranks r+1..r+w, canonicalize least/greatest."""
+    from bela_spark.operators.pairs import keyed_with_counts
     from bela_spark.operators.scoring import fused_block_and_score
 
     rows = [
@@ -121,7 +122,7 @@ def test_chained_pairs_identity_vs_window_form(spark):
         "key", F.lit("mega")
     )
     cfg = LinkageConfig(hot_key_threshold=2, mega_key_threshold=4, chain_window=3)
-    scored, _ = fused_block_and_score(df, cfg, persist=False)
+    scored, _ = fused_block_and_score(keyed_with_counts(df), cfg)
     got = {(r["id1"], r["id2"]) for r in scored.select("id1", "id2").collect()}
 
     ordered = sorted(rows, key=lambda r: (r[1], r[0]))

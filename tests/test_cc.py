@@ -4,6 +4,7 @@ import glob
 import json
 import os
 
+from bela_spark.operators import cc
 from bela_spark.operators.cc import connected_components, latest_round
 
 
@@ -114,27 +115,30 @@ def _chain_plus_cliques(spark):
     return _edges(spark, edges)
 
 
-def test_local_finish_equals_distributed_rounds(spark):
+def test_local_finish_equals_distributed_rounds(spark, monkeypatch):
     """Default path (union-find local finish) == forced distributed star
-    rounds (local_finish_max_edges=0) on the same graph."""
+    rounds (CC_LOCAL_FINISH_MAX_EDGES = 0) on the same graph."""
     e = _chain_plus_cliques(spark)
     fast = connected_components(e)
-    slow = connected_components(e, local_finish_max_edges=0)
+    monkeypatch.setattr(cc, "CC_LOCAL_FINISH_MAX_EDGES", 0)
+    slow = connected_components(e)
     assert fast.converged and slow.converged
     assert _comp_map(fast) == _comp_map(slow)
 
 
-def test_mid_loop_local_finish(spark):
+def test_mid_loop_local_finish(spark, monkeypatch):
     """A bound between 0 and the input size forces: distributed round(s) on
     surrogate longs + frontier split, THEN the union-find on the residue."""
     e = _chain_plus_cliques(spark)
-    want = _comp_map(connected_components(e, local_finish_max_edges=0))
-    mid = connected_components(e, local_finish_max_edges=30)
+    monkeypatch.setattr(cc, "CC_LOCAL_FINISH_MAX_EDGES", 0)
+    want = _comp_map(connected_components(e))
+    monkeypatch.setattr(cc, "CC_LOCAL_FINISH_MAX_EDGES", 30)
+    mid = connected_components(e)
     assert mid.converged
     assert _comp_map(mid) == want
 
 
-def test_checkpoint_local_finish_round_is_resumable(spark, tmp_path):
+def test_checkpoint_local_finish_round_is_resumable(spark, tmp_path, monkeypatch):
     """The checkpointed path persists the union-find round like any other
     round; a resume from it must confirm the fixed point and return the
     identical assignments."""
@@ -147,5 +151,6 @@ def test_checkpoint_local_finish_round_is_resumable(spark, tmp_path):
     assert _comp_map(resumed) == want
     # and with the local finish disabled the same checkpoint semantics hold
     ckpt2 = str(tmp_path / "cc_r6_dist")
-    dist = connected_components(e, checkpoint_dir=ckpt2, local_finish_max_edges=0)
+    monkeypatch.setattr(cc, "CC_LOCAL_FINISH_MAX_EDGES", 0)
+    dist = connected_components(e, checkpoint_dir=ckpt2)
     assert _comp_map(dist) == want

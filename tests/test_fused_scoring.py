@@ -1,4 +1,4 @@
-"""Fused block-and-score: salting equivalence, mega-key chaining, gating."""
+"""Fused block-and-score: key-log strategy labels, mega-key chaining, gating."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -6,19 +6,18 @@ from pyspark.sql import functions as F
 from bela_spark.config import LinkageConfig
 from bela_spark.fixtures import synth_repo_files
 from bela_spark.operators.blocking import blocking_keys
+from bela_spark.operators.pairs import keyed_with_counts
 from bela_spark.operators.scoring import fused_block_and_score, jaccard_gate
 from bela_spark.pipeline import prepare_records, run_linkage
 
 
-def _kwf(base, cfg):
+def _kwf(base, cfg, min_count=1):
+    """The pair-stage input: key rows with their `_kn` and features."""
     keys = blocking_keys(base, cfg)
-    return keys.join(
+    kwf = keys.join(
         base.select("rid", "norm", F.array_distinct("tokens").alias("tokens")), "rid"
     )
-
-
-def _pairs(scored):
-    return {(r["id1"], r["id2"], r["key"]) for r in scored.select("id1", "id2", "key").collect()}
+    return keyed_with_counts(kwf, min_count=min_count)
 
 
 @pytest.fixture(scope="module")
@@ -30,25 +29,26 @@ def base(spark):
     df.unpersist()
 
 
-def test_salted_equals_plain_fused(spark, base, monkeypatch):
-    """Forcing keys through the salt grid must yield the identical pair set.
-    SALT_MIN_KEY_MEMBERS is zeroed so the fixture's small keys actually take
-    the grid (the r6 floor would otherwise route them through the plain
-    join, which is the very equivalence this test exists to prove)."""
-    import bela_spark.operators.scoring as scoring_mod
-
-    monkeypatch.setattr(scoring_mod, "SALT_MIN_KEY_MEMBERS", 0)
-    plain = LinkageConfig(hot_key_threshold=10**9)
-    salted = LinkageConfig(hot_key_threshold=2, mega_key_threshold=10**9, salt_buckets=4)
-    a, _ = fused_block_and_score(_kwf(base, plain), plain, persist=False)
-    b, _ = fused_block_and_score(_kwf(base, salted), salted, persist=False)
-    assert _pairs(a) == _pairs(b)
-    # and with the default floor the same config pairs identically through
-    # the plain join (the gate is execution-only)
-    c, _ = fused_block_and_score(_kwf(base, salted), salted, persist=False)
-    monkeypatch.undo()
-    d, _ = fused_block_and_score(_kwf(base, salted), salted, persist=False)
-    assert _pairs(c) == _pairs(d)
+def test_key_log_labels_the_tier_that_ran(spark):
+    """key_log lists every key above hot_key_threshold with the tier that
+    paired it: a key in (hot, mega] pairs fully in the plain equi-join and
+    is labelled "plain", a key above mega is chained and labelled
+    "chained"; a key at or below hot is not listed."""
+    rows = [(f"a{i}", f"mid body {i}", ["m"], "mid") for i in range(3)]
+    rows += [(f"b{i}", f"big body {i}", ["b"], "big") for i in range(6)]
+    rows += [(f"c{i}", f"cold body {i}", ["c"], "cold") for i in range(2)]
+    df = spark.createDataFrame(rows, ["rid", "norm", "tokens", "key"])
+    cfg = LinkageConfig(hot_key_threshold=2, mega_key_threshold=4, chain_window=2)
+    scored, klog = fused_block_and_score(keyed_with_counts(df), cfg)
+    assert {r["key"]: (r["n_ids"], r["strategy"]) for r in klog.collect()} == {
+        "mid": (3, "plain"),
+        "big": (6, "chained"),
+    }
+    per_key = {
+        r["key"]: r["count"] for r in scored.groupBy("key").count().collect()
+    }
+    # plain pairs all C(3, 2); the chain of 6 at window 2 emits 5 + 4
+    assert per_key == {"mid": 3, "big": 9, "cold": 1}
 
 
 def test_chain_content_order_finds_groups(spark):
@@ -66,7 +66,7 @@ def test_chain_content_order_finds_groups(spark):
         "key", F.lit("mega")
     )
     cfg = LinkageConfig(hot_key_threshold=2, mega_key_threshold=4, chain_window=2)
-    scored, klog = fused_block_and_score(df, cfg, persist=False)
+    scored, klog = fused_block_and_score(keyed_with_counts(df), cfg)
     assert {r["strategy"] for r in klog.collect()} == {"chained"}
     intra = scored.filter(
         F.substring("id1", 1, 4) == F.substring("id2", 1, 4)
@@ -81,12 +81,12 @@ def test_chain_window_zero_rejected(spark, base):
     """w=0 would make F.sequence count DOWN and emit self-pairs — refuse."""
     cfg = LinkageConfig(hot_key_threshold=4, mega_key_threshold=8, chain_window=0)
     with pytest.raises(ValueError, match="chain_window"):
-        fused_block_and_score(_kwf(base, cfg), cfg, persist=False)
+        fused_block_and_score(_kwf(base, cfg), cfg)
 
 
 def test_chaining_kicks_in_and_is_linear(spark, base):
     cfg = LinkageConfig(hot_key_threshold=4, mega_key_threshold=8, chain_window=2)
-    scored, klog = fused_block_and_score(_kwf(base, cfg), cfg, persist=False)
+    scored, klog = fused_block_and_score(_kwf(base, cfg), cfg)
     strategies = {r["strategy"] for r in klog.collect()}
     assert "chained" in strategies
     # chained key contributes at most n*w pairs, not C(n,2)
@@ -116,7 +116,7 @@ def test_mega_group_still_one_cluster(spark):
              f"def shared_fn(a, b):\n    return a + b * 7\n# tag {i % 3}\n")
         )
     df = spark.createDataFrame(rows, ["repo", "path", "commit", "lang", "content"])
-    run = run_linkage(df, cfg, persist=False)
+    run = run_linkage(df, cfg)
     n_clusters = run.clusters.select("cluster_id").distinct().count()
     assert n_clusters == 1, n_clusters
 
@@ -127,12 +127,12 @@ def test_gating_preserves_edges(spark, base):
     cfg = LinkageConfig()
     from bela_spark.operators.scoring import _score_exprs, accept_edges
 
-    scored, _ = fused_block_and_score(_kwf(base, cfg), cfg, persist=False)
+    scored, _ = fused_block_and_score(_kwf(base, cfg), cfg)
     gated_edges = {(r["id1"], r["id2"]) for r in accept_edges(scored, cfg).collect()}
 
     # ungated reference: recompute features with the gate forced open
     open_cfg = LinkageConfig(score_threshold=-1.0)  # gate: everything passes
-    scored_open, _ = fused_block_and_score(_kwf(base, open_cfg), open_cfg, persist=False)
+    scored_open, _ = fused_block_and_score(_kwf(base, open_cfg), open_cfg)
     ungated_edges = {
         (r["id1"], r["id2"])
         for r in scored_open.filter(F.col("score") >= cfg.score_threshold)
@@ -153,27 +153,20 @@ def test_jaccard_gate_formula():
 
 
 @pytest.mark.parametrize("tiers", ["hot_and_chained_empty", "hot_and_chained_live"])
-def test_measured_max_kn_matches_all_tier_build(spark, base, monkeypatch, tiers):
+def test_measured_max_kn_matches_all_tier_build(spark, base, tiers):
     """With the measured max_kn (and the chained tier's row total)
     fused_block_and_score returns exactly the rows of the all-tiers build
-    (max_kn=None), on an input whose salted and chained tiers are empty and
-    on one where both are live. Empty tiers are not planned, and building
-    the stage runs no Spark job: the chained tier's range-boundary count is
-    taken from mega_rows, not from a job."""
+    (max_kn=None), on an input with no key above hot_key_threshold and on
+    one with keys in both (hot, mega] and above mega. An empty chained tier
+    is not planned, and building the stage runs no Spark job: the chained
+    tier's range-boundary count is taken from mega_rows, not from a job."""
     from conftest import executed_plan, jobs_run
 
-    import bela_spark.operators.scoring as scoring_mod
-    from bela_spark.operators.pairs import keyed_with_counts
-
     if tiers == "hot_and_chained_live":
-        # floor 0: keys above hot_key_threshold take the salt grid
-        monkeypatch.setattr(scoring_mod, "SALT_MIN_KEY_MEMBERS", 0)
-        cfg = LinkageConfig(
-            hot_key_threshold=3, mega_key_threshold=8, salt_buckets=4, chain_window=2
-        )
+        cfg = LinkageConfig(hot_key_threshold=3, mega_key_threshold=8, chain_window=2)
     else:
         cfg = LinkageConfig()
-    kwf = keyed_with_counts(_kwf(base, cfg), min_count=2).cache()
+    kwf = _kwf(base, cfg, min_count=2).cache()
     kn = F.col("_kn")
     per_key = kwf.groupBy("key").agg(F.max(kn).alias("_kn"))
     max_kn, mega_rows = per_key.agg(
@@ -185,19 +178,14 @@ def test_measured_max_kn_matches_all_tier_build(spark, base, monkeypatch, tiers)
     else:
         assert 2 <= max_kn <= cfg.hot_key_threshold
 
-    full, full_log = fused_block_and_score(kwf, cfg, counts_attached=True, persist=False)
+    full, full_log = fused_block_and_score(kwf, cfg)
     (measured, measured_log), jobs = jobs_run(
         spark,
-        lambda: fused_block_and_score(
-            kwf, cfg, counts_attached=True, persist=False,
-            max_kn=max_kn, mega_rows=mega_rows,
-        ),
+        lambda: fused_block_and_score(kwf, cfg, max_kn=max_kn, mega_rows=mega_rows),
     )
     assert jobs == 0
     assert sorted(map(tuple, measured.collect())) == sorted(map(tuple, full.collect()))
     assert sorted(map(tuple, measured_log.collect())) == sorted(map(tuple, full_log.collect()))
-    plan = executed_plan(measured)
     live = tiers == "hot_and_chained_live"
-    assert ("_s1" in plan) == live  # the salt grid's join column
-    assert ("_cn2" in plan) == live  # the chain's join column
+    assert ("_cn2" in executed_plan(measured)) == live  # the chain's join column
     kwf.unpersist()

@@ -82,16 +82,17 @@ def test_weighted_jaccard_matches_python(spark):
 
 
 def test_packed_kernel_matches_struct_kernel(spark):
-    """weight_tokens_packed + weighted_jaccard_packed_cols must reproduce the
-    generic struct kernel EXACTLY (same integer operands, one final double
-    division -> bit-equal floats) on integer token sets: the pipeline runs
-    the packed form, the oracle-pinned er_idf_* queries run the struct form,
-    and this equality is what ties the two together."""
+    """weight_tokens_packed + weighted_jaccard_packed_ix_staged, applied in
+    its documented order (gated _ix, drop t1/t2, _wi, wjac), must reproduce
+    the generic struct kernel EXACTLY (same integer operands, one final
+    double division -> bit-equal floats) on integer token sets: the pair
+    stage runs the packed form, the oracle-pinned er_idf_* queries run the
+    struct form, and this equality is what ties the two together."""
     import random
 
     from bela_spark.operators.idf import (
         weight_tokens_packed,
-        weighted_jaccard_packed_cols,
+        weighted_jaccard_packed_ix_staged,
     )
 
     rng = random.Random(13)
@@ -101,23 +102,33 @@ def test_packed_kernel_matches_struct_kernel(spark):
     ]
     df = spark.createDataFrame(rows, "rid string, tokens array<int>")
 
-    def all_pairs(tw, bound, wjac):
+    def all_pairs(tw):
         a = tw.select(
             F.col("rid").alias("id1"), F.col("tokens").alias("t1"), F.col("ws").alias("s1")
         )
         b = tw.select(
             F.col("rid").alias("id2"), F.col("tokens").alias("t2"), F.col("ws").alias("s2")
         )
-        return {
-            (r["id1"], r["id2"]): (r["b"], r["j"])
-            for r in a.crossJoin(b)
-            .filter(F.col("id1") < F.col("id2"))
-            .select("id1", "id2", bound.alias("b"), wjac.alias("j"))
-            .collect()
-        }
+        return a.crossJoin(b).filter(F.col("id1") < F.col("id2"))
 
-    got_struct = all_pairs(weight_tokens(df), *weighted_jaccard_cols())
-    got_packed = all_pairs(weight_tokens_packed(df), *weighted_jaccard_packed_cols())
+    def by_pair(scored):
+        return {(r["id1"], r["id2"]): (r["b"], r["j"]) for r in scored.collect()}
+
+    bound, wjac = weighted_jaccard_cols()
+    got_struct = by_pair(
+        all_pairs(weight_tokens(df)).select("id1", "id2", bound.alias("b"), wjac.alias("j"))
+    )
+    size_bound, ix_expr, wi_expr, wjac_expr = weighted_jaccard_packed_ix_staged()
+    got_packed = by_pair(
+        all_pairs(weight_tokens_packed(df))
+        .withColumn("b", size_bound)
+        # a gate every pair passes (the bound is never negative), so each
+        # pair's value is compared
+        .withColumn("_ix", F.when(F.col("b") >= F.lit(0.0), ix_expr))
+        .drop("t1", "t2")
+        .withColumn("_wi", wi_expr)
+        .select("id1", "id2", "b", wjac_expr.alias("j"))
+    )
     assert got_struct == got_packed
     assert len(got_packed) == 60 * 59 // 2
 
@@ -233,7 +244,7 @@ def test_packed_broadcast_fast_path_matches_legacy_dag(spark):
 
 
 def test_packed_broadcast_fast_path_gates_on_vocab_bound(spark):
-    """Vocabulary above BELA_IDF_BROADCAST_MAX_TOKENS must fall back to the
+    """Vocabulary above idf.IDF_BROADCAST_MAX_TOKENS must fall back to the
     legacy DAG (no Python node in the plan) with identical values."""
     from bela_spark.operators import idf
 

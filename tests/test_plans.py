@@ -59,6 +59,7 @@ def test_no_whole_key_content_window_in_pair_stage(spark):
     from pyspark.sql import functions as F
 
     from bela_spark.config import LinkageConfig
+    from bela_spark.operators.pairs import keyed_with_counts
     from bela_spark.operators.scoring import fused_block_and_score
 
     rows = [(f"id{i:03d}", f"body {i:03d}", ["t"]) for i in range(60)]
@@ -66,7 +67,7 @@ def test_no_whole_key_content_window_in_pair_stage(spark):
         "key", F.lit("mega")
     )
     cfg = LinkageConfig(hot_key_threshold=2, mega_key_threshold=4, chain_window=2)
-    scored, _ = fused_block_and_score(df, cfg, persist=False)
+    scored, _ = fused_block_and_score(keyed_with_counts(df), cfg)
     plan = executed_plan(scored)
     # Window spec renders as "...], [<partition cols>], [<order cols>]":
     # a single key#N partition spec whose order starts with norm#N is the
@@ -90,6 +91,7 @@ def test_weighted_intersection_outside_fallback_project(spark):
 
     from bela_spark.config import LinkageConfig
     from bela_spark.operators.idf import weight_tokens_packed
+    from bela_spark.operators.pairs import keyed_with_counts
     from bela_spark.operators.scoring import fused_block_and_score
 
     rows = [(f"id{i:03d}", f"body {i:03d}", [i, i + 1, i + 2]) for i in range(40)]
@@ -97,10 +99,8 @@ def test_weighted_intersection_outside_fallback_project(spark):
         spark.createDataFrame(rows, ["rid", "norm", "tokens"])
         .withColumn("key", F.lit("k"))
     )
-    df = weight_tokens_packed(df)
-    scored, _ = fused_block_and_score(
-        df, LinkageConfig.at_scale(), persist=False
-    )
+    df = keyed_with_counts(weight_tokens_packed(df))
+    scored, _ = fused_block_and_score(df, LinkageConfig.at_scale())
     plan = executed_plan(scored)
     offending = [
         line
@@ -134,7 +134,7 @@ def test_no_row_proportional_broadcast_in_linkage_final_plan(spark):
     from bela_spark.pipeline import run_linkage
 
     df = synth_repo_files(spark, 400, seed=7)
-    # force all three key tiers so the chained offsets join is in the plan
+    # force both key tiers so the chained offsets join is in the plan
     cfg = LinkageConfig.at_scale(
         hot_key_threshold=2, mega_key_threshold=4, chain_window=2
     )
