@@ -23,13 +23,19 @@ earlier.
 Round-6 execution strategy (semantics unchanged — exact CC, component = min
 member id — only the schedule differs):
 
-  - A canonical edge set that fits ONE bounded task (<= CC_LOCAL_FINISH_MAX_EDGES,
+  - An edge set that fits ONE bounded task (<= CC_LOCAL_FINISH_MAX_EDGES,
     1M edges ~ 16 MB of long pairs / ~130 MB of sha-string pairs) is
-    finished by a single-task union-find (`_local_star_edges`): measured at the
+    finished by a single-task union-find (`_union_find`): measured at the
     600k-row bench, the star rounds spent 7 x ~3.3 s of stage latency fixing
     ~60 straggler edges after round 1 had already collapsed 555k edges to 129k.
     The bound is explicit — above it, distributed rounds proceed exactly as
     before, so the hybrid is scale-adaptive, not a local[32] tune.
+  - The no-checkpoint path tests that bound on the caller's RAW edges, cut
+    once with the count observed on the cut (duplicates, reversed edges and
+    self-loops only make the raw count larger than the canonical one), and
+    below it the union-find emits (rid, component) directly
+    (`_local_assignments`): no canonicalizing shuffle, no count job, no star
+    edges and none of the two shuffles that read assignments off them.
   - The no-checkpoint path runs its rounds over dense surrogate LONG ids and
     splits SETTLED stars (components already in final, disconnected form) out
     of the frontier each round, so later rounds shuffle only the unconverged
@@ -50,8 +56,9 @@ import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import StructField, StructType
 
-from bela_spark.session import release
+from bela_spark.session import observed_cut, release
 
 
 @dataclass
@@ -73,79 +80,108 @@ class CCResult:
 CC_LOCAL_FINISH_MAX_EDGES = 1_000_000
 
 
+def _union_find(batches):
+    """The single-task union-find kernel over the (id1, id2) pandas batches
+    of one task: (ids, min_idx, multi) — every node, the index into `ids`
+    of its component's min member, and whether its component has two or
+    more nodes. None when the task holds no edge.
+
+    Works for any orderable id type the engine uses (sha-hex strings compare
+    identically in UTF-8 bytes and code points; surrogate longs compare
+    numerically). Duplicate edges, either orientation and self-loops are
+    all fine: a self-loop-only node is its own 1-node component. An edge
+    with a null end joins nothing (as in the distributed rounds' joins)."""
+    import numpy as np
+    import pandas as pd
+
+    parts = [b for b in batches if len(b)]
+    df = pd.concat(parts, ignore_index=True).dropna() if parts else None
+    if df is None or not len(df):
+        return None
+    vals = pd.concat([df["id1"], df["id2"]], ignore_index=True)
+    codes, uniques = pd.factorize(vals)
+    m = len(df)
+    c1, c2 = codes[:m], codes[m:]
+    parent = np.arange(len(uniques), dtype=np.int64)
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]  # path halving
+            x = parent[x]
+        return x
+
+    for a, b in zip(c1.tolist(), c2.tolist()):
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[rb] = ra
+    n_u = len(uniques)
+    roots = np.fromiter((find(i) for i in range(n_u)), dtype=np.int64, count=n_u)
+    # min member per root, vectorized (r6: the pandas object-dtype
+    # groupby-min was ~1.9s of the ~2.8s single-task kernel at 555k edges;
+    # this path reads 0.1-0.2s, byte-identical output). ASCII strings sort
+    # as fixed-width bytes (C memcmp == code-point order); other strings
+    # sort as Python objects (code-point order, which UTF-8 byte order
+    # preserves); numerics sort natively. Per-root min is minimum.at over
+    # sort ranks, mapped back through INDICES so original id objects are
+    # reused, never re-decoded.
+    uq = np.asarray(uniques)
+    try:
+        sort_key = uq.astype("S") if uq.dtype == object else uq
+    except UnicodeEncodeError:
+        sort_key = uq
+    order = np.argsort(sort_key, kind="stable")
+    ranks = np.empty(n_u, dtype=np.int64)
+    ranks[order] = np.arange(n_u)
+    min_rank = np.full(n_u, n_u, dtype=np.int64)
+    np.minimum.at(min_rank, roots, ranks)
+    multi = np.bincount(roots, minlength=n_u)[roots] >= 2
+    return uq, order[min_rank[roots]], multi
+
+
 def _local_star_edges(cur: DataFrame) -> DataFrame:
-    """Exact CC of a BOUNDED canonical edge set in one executor task: the
-    partitions are coalesced (narrow, no shuffle) into a single task that runs
-    an array-based union-find and emits the final star forest
-    (component-min -> member), i.e. precisely the fixed point the distributed
-    star rounds converge to — downstream extraction is shared.
+    """Exact CC of a BOUNDED edge set in one executor task: the partitions
+    are coalesced (narrow, no shuffle) into a single task that runs the
+    union-find and emits the final star forest (component-min -> member),
+    i.e. precisely the fixed point the distributed star rounds converge to —
+    downstream extraction is shared.
 
     Deliberate exception to the no-whole-set-in-one-task rule: the caller
     gates this on an explicit, documented row bound (CC_LOCAL_FINISH_MAX_EDGES),
     so unlike a window over an unbounded key the task's memory is capped by
-    config, not by data. Works for any orderable id type the engine uses
-    (sha-hex strings compare identically in UTF-8 bytes and code points;
-    surrogate longs compare numerically)."""
-    schema = cur.schema
+    config, not by data."""
 
     def finish(batches):
         import numpy as np
         import pandas as pd
 
-        parts = [b for b in batches if len(b)]
-        if not parts:
+        found = _union_find(batches)
+        if found is None:
             return
-        df = pd.concat(parts, ignore_index=True)
-        vals = pd.concat([df["id1"], df["id2"]], ignore_index=True)
-        codes, uniques = pd.factorize(vals)
-        m = len(df)
-        c1, c2 = codes[:m], codes[m:]
-        parent = np.arange(len(uniques), dtype=np.int64)
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]  # path halving
-                x = parent[x]
-            return x
-
-        for a, b in zip(c1.tolist(), c2.tolist()):
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[rb] = ra
-        roots = np.fromiter(
-            (find(i) for i in range(len(uniques))), dtype=np.int64, count=len(uniques)
-        )
-        # min member per root, vectorized (r6: the pandas object-dtype
-        # groupby-min was ~1.9s of the ~2.8s single-task kernel at 555k
-        # edges; this path reads 0.1-0.2s, byte-identical output). Strings
-        # sort as fixed-width bytes (C memcmp == code-point order for the
-        # engine's ASCII ids; UTF-8 byte order preserves code-point order
-        # generally), numerics sort natively; per-root min is minimum.at
-        # over sort ranks, mapped back through INDICES so original id
-        # objects are reused, never re-decoded.
-        uq = np.asarray(uniques)
-        try:
-            sort_key = uq.astype("S") if uq.dtype == object else uq
-        except UnicodeEncodeError:
-            # non-ASCII ids: fall back to the generic pandas min
-            u = pd.Series(uq)
-            comp_min = u.groupby(roots).transform("min")
-            keep = (u != comp_min).to_numpy()
-            yield pd.DataFrame(
-                {"id1": comp_min[keep].to_numpy(), "id2": u[keep].to_numpy()}
-            )
-            return
-        n_u = len(uq)
-        order = np.argsort(sort_key, kind="stable")
-        ranks = np.empty(n_u, dtype=np.int64)
-        ranks[order] = np.arange(n_u)
-        min_rank = np.full(n_u, n_u, dtype=np.int64)
-        np.minimum.at(min_rank, roots, ranks)
-        min_idx = order[min_rank[roots]]
-        keep = min_idx != np.arange(n_u)
+        uq, min_idx, _ = found
+        keep = min_idx != np.arange(len(uq))
         yield pd.DataFrame({"id1": uq[min_idx[keep]], "id2": uq[keep]})
 
-    return cur.coalesce(1).mapInPandas(finish, schema=schema)
+    return cur.coalesce(1).mapInPandas(finish, schema=cur.schema)
+
+
+def _local_assignments(edges: DataFrame) -> DataFrame:
+    """(rid, component) of a BOUNDED edge set in one task (same bound and
+    kernel as _local_star_edges): every node of each component with two or
+    more nodes, component = its min member — what _star_assignments reads
+    off the star forest, without the star edges' two shuffles."""
+    t = edges.schema["id1"].dataType
+    schema = StructType([StructField("rid", t), StructField("component", t)])
+
+    def finish(batches):
+        import pandas as pd
+
+        found = _union_find(batches)
+        if found is None:
+            return
+        uq, min_idx, multi = found
+        yield pd.DataFrame({"rid": uq[multi], "component": uq[min_idx[multi]]})
+
+    return edges.coalesce(1).mapInPandas(finish, schema=schema)
 
 
 def _split_stable(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -364,7 +400,8 @@ def connected_components(
 ) -> CCResult:
     """(id1, id2) edge set -> (rid, component) with component = min member id.
 
-    Only nodes that appear in an edge are returned; callers assign singleton
+    Only nodes that share an edge with another node are returned (a node
+    whose only edges are self-loops gets no row); callers assign singleton
     records their own id via left join + coalesce (see pipeline.assign_clusters).
 
     Without a checkpoint_dir the star rounds run over dense surrogate LONG
@@ -375,6 +412,12 @@ def connected_components(
     primitive comparisons (measured: the 600k-row bench CC fell from ~55s to
     ~17s, OPTIMIZATION_r06.md). The checkpointed path keeps the caller's ids
     on disk so round parquet + manifests stay directly resumable/auditable.
+
+    Without a checkpoint_dir and with at most CC_LOCAL_FINISH_MAX_EDGES raw
+    edges, `assignments` is a lazy single-task union-find over the cut of
+    the raw edges: every action on it (or on clusters built from it) runs
+    that task again, so a caller that reads it more than once caches or
+    cuts it first.
     """
     lim = CC_LOCAL_FINISH_MAX_EDGES
     if checkpoint_dir is None:
@@ -482,8 +525,9 @@ def _star_assignments(cur: DataFrame) -> DataFrame:
 def _connected_components_local(edges: DataFrame, max_rounds: int, lim: int) -> CCResult:
     """The no-checkpoint CC path.
 
-    1. If the canonical input fits the local-finish bound, one union-find
-       task produces the final star forest directly — zero star rounds.
+    1. If the raw input fits the local-finish bound, one union-find task
+       produces the assignments directly — zero star rounds (counted as one
+       round, as the checkpointed path's union-find round file is).
     2. Otherwise the star rounds run over dense surrogate LONG ids, each
        round splits settled stars out of the frontier (_split_stable), and
        the union-find finishes the frontier the moment it fits the bound
@@ -510,20 +554,25 @@ def _connected_components_local(edges: DataFrame, max_rounds: int, lim: int) -> 
         cuts.append(df)
         return df
 
-    cur0 = _canonical(edges).localCheckpoint()
-    n0 = cur0.count()
-    if n0 <= lim:
-        stars = cut(_local_star_edges(cur0))
-        # the eager cut above materialized the stars: cur0 is dead
-        release(cur0)
+    # the caller's edges as they are: duplicates, either orientation and
+    # self-loops only ever make the raw count larger than the canonical
+    # one, so a raw count within the bound is a safe test for the
+    # single-task path, and it is observed on the cut at no extra job
+    raw, (n_raw,) = observed_cut(edges, n=F.count("*"))
+    if n_raw <= lim:
         # the union-find pass counts as one round (the checkpointed path
-        # persists it as a real round file, so the accounting matches)
+        # persists it as a real round file, so the accounting matches); the
+        # canonical set is empty exactly when the raw one is
         return CCResult(
-            assignments=_star_assignments(stars),
-            rounds=1 if n0 else 0,
+            assignments=_local_assignments(raw),
+            rounds=1 if n_raw else 0,
             converged=True,
-            checkpoints=cuts,
+            checkpoints=[raw],
         )
+
+    cur0 = _canonical(raw).localCheckpoint()
+    # the canonical cut is materialized: the raw edges are dead
+    release(raw)
 
     nodes = (
         cur0.select(F.col("id1").alias("rid"))

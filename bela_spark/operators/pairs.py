@@ -64,6 +64,25 @@ def keyed_with_counts(
     ).drop("_kwc_key")
 
 
+def keyed_with_counts_cut(
+    keys: DataFrame, mega_key_threshold: int
+) -> tuple[DataFrame, int, int]:
+    """keyed_with_counts(keys) as one eager cut, plus the two numbers
+    fused_block_and_score plans its tiers from, observed on the cut at no
+    job of their own (session.observed_cut): (cut, max_kn, mega_rows) — the
+    largest key's size and the row count of keys above
+    mega_key_threshold, i.e. the chained tier's rows."""
+    from bela_spark.session import observed_cut
+
+    kn = F.col("_kn")
+    cut, (max_kn, mega_rows) = observed_cut(
+        keyed_with_counts(keys),
+        max_kn=F.coalesce(F.max(kn), F.lit(0)),
+        mega_rows=F.count(F.when(kn > mega_key_threshold, kn)),
+    )
+    return cut, max_kn, mega_rows
+
+
 # target rows per range chunk in ranked_in_key: small enough that a chunk's
 # local sort is a trivial task, big enough that the per-row chunk expression
 # stays short on small frames (see range_boundaries)

@@ -163,8 +163,9 @@ def fused_block_and_score(
                                        through the chain and CC closes them.
 
     Tier planning: `max_kn` is the largest `_kn` of the input when the
-    caller measured it (run_linkage's counts gate does, in the same
-    aggregate that sizes its broadcast). When no key is above
+    caller measured it (run_linkage's counts gate, ingest's pair-stage cut
+    and er_chained_pairs observe it on a cut they take anyway, see
+    session.observed_cut). When no key is above
     mega_key_threshold the chained tier is neither built nor planned nor
     run — its range-boundary jobs go with it. `mega_rows`, the chained
     tier's row total (sum of `_kn` over keys above mega_key_threshold),

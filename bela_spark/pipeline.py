@@ -29,7 +29,7 @@ from bela_spark.operators.scoring import (
     dedup_scored,
     fused_block_and_score,
 )
-from bela_spark.session import release
+from bela_spark.session import observed_cut, release
 
 
 @dataclass
@@ -190,10 +190,10 @@ def run_linkage(
     # skips was a pure no-op exchange of the widest pre-pair frame (r6).
     keys_slim = blocking_keys(base, cfg, dedup=False)
     if persist:
-        # the counts join below evaluates its input twice (counts branch +
-        # probe branch); without this persist each branch re-runs the whole
-        # key-gen DAG — 16x md5 minhash included. Freed as soon as the
-        # pair-stage input is cut.
+        # the counts cut and the counts join below read it (counts branch +
+        # probe branch); without this persist each re-runs the whole key-gen
+        # DAG — 16x md5 minhash included. Freed as soon as the pair-stage
+        # input is cut.
         keys_slim = keys_slim.persist()
     # key cardinalities aggregated over the SLIM (rid, key) frame BEFORE the
     # feature join (r6): the key-gen/feature join below is 1:1 per rid
@@ -215,23 +215,23 @@ def run_linkage(
         # measured-count broadcast gate (see COUNTS_BROADCAST_MAX_KEYS): the
         # filtered counts table is tiny under selective blocking (~140k keys
         # at 600k records), and broadcasting it lets the 2.45M-row probe side
-        # flow narrow into the join instead of shuffling. ONE aggregate over
-        # the cached counts measures the key count (exact, never a size
+        # flow narrow into the join instead of shuffling. The counts are cut
+        # once, and the cut observes the key count (exact, never a size
         # estimate), the largest key (whether fused_block_and_score's chained
         # tier can hold a row) and the chained tier's row total (its rank
-        # boundaries); above the bound the pinned shuffle-hash join runs.
-        multi = (
+        # boundaries) at no job of its own; above the bound the pinned
+        # shuffle-hash join runs.
+        kn = F.col("_kn")
+        multi, (n_multi, max_kn, mega_rows) = observed_cut(
             keys_slim.groupBy("key")
             .agg(F.count("*").alias("_kn"))
-            .filter(F.col("_kn") >= 2)
-            .persist()
+            .filter(kn >= 2),
+            n_multi=F.count("*"),
+            max_kn=F.coalesce(F.max(kn), F.lit(0)),
+            mega_rows=F.coalesce(
+                F.sum(F.when(kn > cfg.mega_key_threshold, kn)), F.lit(0)
+            ),
         )
-        kn = F.col("_kn")
-        n_multi, max_kn, mega_rows = multi.agg(
-            F.count("*"),
-            F.coalesce(F.max(kn), F.lit(0)),
-            F.coalesce(F.sum(F.when(kn > cfg.mega_key_threshold, kn)), F.lit(0)),
-        ).first()
         cnt = multi.withColumnRenamed("key", "_kwc_key")
         if 0 < COUNTS_BROADCAST_MAX_KEYS and n_multi <= COUNTS_BROADCAST_MAX_KEYS:
             cnt = F.broadcast(cnt)
@@ -260,7 +260,7 @@ def run_linkage(
         keys_with_features = keys_with_features.localCheckpoint()
         held.append(keys_with_features)
         keys_slim.unpersist()
-        multi.unpersist()
+        release(multi)
     scored_by_key, drops = fused_block_and_score(
         keys_with_features,
         cfg,

@@ -164,7 +164,7 @@ def er_chained_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays the rank as a row_number window, so every rank the two-phase
     implementation assigns is value-checked against the single-window
     form."""
-    from bela_spark.operators.pairs import keyed_with_counts
+    from bela_spark.operators.pairs import keyed_with_counts_cut
     from bela_spark.operators.scoring import fused_block_and_score
 
     cfg = LinkageConfig(hot_key_threshold=2, mega_key_threshold=3, chain_window=2)
@@ -175,14 +175,18 @@ def er_chained_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array_distinct("tokens").alias("tokens"),
     )
     kwf = keys.join(recs, "doc_id")
-    # persisted, MEASURED (r6 interleaved A/B, 3/3 rounds: 9.5s vs 13.5s
-    # mean): the lowered thresholds send most keys to the mega tier, whose
-    # two-phase rank runs EAGER boundary jobs — each a separate job that
-    # would re-execute the minhash key-gen + record join without the
-    # persist. Contrast er_candidate_pairs, where no mega tier engages and
-    # the persist barrier measured slower.
-    keyed = keyed_with_counts(kwf).persist()
-    scored, _ = fused_block_and_score(keyed, cfg, id_col="doc_id")
+    # cut, MEASURED (r6 interleaved A/B of a persist, 3/3 rounds: 9.5s vs
+    # 13.5s mean): the lowered thresholds send most keys to the mega tier,
+    # whose two-phase rank runs an EAGER boundary job that would re-execute
+    # the minhash key-gen + record join without it. The cut observes the
+    # largest key and the chained tier's rows, so the rank skips its count
+    # job, and unlike a persist it leaves nothing in the session's cache.
+    # Contrast er_candidate_pairs, where no mega tier engages and the
+    # persist barrier measured slower.
+    keyed, max_kn, mega_rows = keyed_with_counts_cut(kwf, cfg.mega_key_threshold)
+    scored, _ = fused_block_and_score(
+        keyed, cfg, id_col="doc_id", max_kn=max_kn, mega_rows=mega_rows
+    )
     return scored.select("id1", "id2", "key").distinct()
 
 

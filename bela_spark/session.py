@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 # local-mode driver heap: this share of physical memory, within these bounds
 # (the rest is left to the Python workers, the page cache and the OS)
@@ -71,6 +71,21 @@ def release(*frames) -> None:
         plan = df._jdf.queryExecution().analyzed()
         if plan.getClass().getSimpleName() == "LogicalRDD":
             plan.rdd().unpersist(False)
+
+
+def observed_cut(df: DataFrame, **aggs: Column) -> tuple[DataFrame, tuple]:
+    """(an eager ``localCheckpoint`` of `df`, the values of `aggs` over it).
+
+    Each keyword is an aggregate expression observed (``DataFrame.observe``)
+    on the rows as the cut writes them, so a gate reads its measurements off
+    a cut the code takes anyway, at no extra Spark job. Values come back in
+    keyword order. An aggregate over no rows reads as SQL does (count 0, max
+    null): wrap it in ``coalesce`` where the caller needs a number. Free the
+    cut with ``release``."""
+    obs = Observation()
+    cut = df.observe(obs, *[c.alias(name) for name, c in aggs.items()]).localCheckpoint()
+    got = obs.get
+    return cut, tuple(got[name] for name in aggs)
 
 
 def get_spark(

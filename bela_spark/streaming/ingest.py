@@ -6,15 +6,24 @@ Spark extension, not a ported operator: new records arrive as files in a
 directory (stand-in for a Kafka/Iceberg CDC feed), and each micro-batch is
 linked against the ACCUMULATED record state via foreachBatch:
 
-  micro-batch -> normalize/sha -> batch-first merge into the record state
+  micro-batch -> normalize/sha -> batch-first merge into the record state,
+                which also finds the rids whose content changed (one cut)
              -> blocking keys for the batch's rows only; every other rid
-                reuses its stored keys
+                reuses its stored keys (one cut)
              -> touched keys (those holding a batch rid) joined to slim
-                features, materialized once
-             -> pairs within touched keys -> score -> accepted edges
-             -> edge log minus edges of content-changed rids, plus new edges
-             -> connected components over the touched components only
+                features with their key counts, cut once; the cut observes
+                the largest key and the chained tier's rows, so a batch
+                without a key above mega_key_threshold plans no chained tier
+             -> pairs within touched keys -> score -> accepted edges, unioned
+                with the edge log minus edges of content-changed rids (one
+                cut, each edge marked new or stored)
+             -> connected components over the touched components only (a
+                small graph: one cut, one union-find task)
              -> records/, keys/, edges/, clusters/ overwritten (parquet)
+
+State tables are read with their stored schemas, so reading one starts no
+Spark job. At the benchmark's size a micro-batch is ten SQL executions, and
+its cost is mostly fixed cost per execution, not rows (BASELINE.md).
 
 Stored keys are derived state, valid only for the key parameters they were
 built with (KEY_PARAMS, recorded on every key row). A state with no keys/
@@ -39,7 +48,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from bela_spark.config import LinkageConfig
 from bela_spark.operators.blocking import blocking_keys
 from bela_spark.operators.cc import connected_components
-from bela_spark.operators.pairs import keyed_with_counts
+from bela_spark.operators.pairs import keyed_with_counts_cut
 from bela_spark.operators.scoring import fused_block_and_score
 from bela_spark.pipeline import prepare_records
 
@@ -74,11 +83,20 @@ class IncrementalLinkage:
         self.edges_dir = os.path.join(state_dir, "edges")
         self.clusters_dir = os.path.join(state_dir, "clusters")
 
-    def _existing(self, spark: SparkSession, path: str, schema: str) -> DataFrame:
-        if os.path.isdir(path) and any(
+    @staticmethod
+    def _stored(path: str) -> bool:
+        """Whether a table is stored at `path` (a directory listing, no
+        Spark job)."""
+        return os.path.isdir(path) and any(
             f.endswith(".parquet") for f in os.listdir(path)
-        ):
-            return spark.read.parquet(path)
+        )
+
+    def _existing(self, spark: SparkSession, path: str, schema: str) -> DataFrame:
+        """The stored table at `path` read with `schema` (so no footer
+        inference job runs; a column the files lack reads as null), or an
+        empty frame of that schema when nothing is stored yet."""
+        if self._stored(path):
+            return spark.read.schema(schema).parquet(path)
         return spark.createDataFrame([], schema)
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
@@ -104,17 +122,24 @@ class IncrementalLinkage:
         # full tie-break: the same rid at the same priority (a replayed batch
         # file carrying duplicate rows for one rid with differing content)
         # must resolve deterministically — content_sha is the only column
-        # that can differ within a rid (rid = sha256(repo||path||commit))
-        prio = W.partitionBy("rid").orderBy("_prio", "content_sha")
+        # that can differ within a rid (rid = sha256(repo||path||commit)).
+        # _old_sha, the stored content of the rid (stored rids are unique),
+        # rides along so the content-change test below is a filter of the
+        # cut, not a join of its own
+        by_rid = W.partitionBy("rid")
         resolved = (
             new_records.withColumn("_prio", F.lit(0))
             .unionByName(existing.withColumn("_prio", F.lit(1)))
-            .withColumn("_rn", F.row_number().over(prio))
+            .withColumn("_rn", F.row_number().over(by_rid.orderBy("_prio", "content_sha")))
+            .withColumn(
+                "_old_sha",
+                F.max(F.when(F.col("_prio") == 1, F.col("content_sha"))).over(by_rid),
+            )
             .filter(F.col("_rn") == 1)
             .drop("_rn")
             .localCheckpoint()
         )
-        all_records = resolved.drop("_prio")
+        all_records = resolved.drop("_prio", "_old_sha")
         # the batch's rows after resolution, read from the cut above rather
         # than by re-running the batch's normalize stage
         batch_rows = resolved.filter(F.col("_prio") == 0)
@@ -123,21 +148,16 @@ class IncrementalLinkage:
         # rids whose content CHANGED in this batch: every stored edge incident
         # to them was derived from the old content and is now invalid — a
         # cluster must never outlive the evidence it was built on
-        changed = (
-            batch_rows.select("rid", "content_sha")
-            .join(
-                existing.select("rid", F.col("content_sha").alias("_old_sha")), "rid"
-            )
-            .filter(F.col("content_sha") != F.col("_old_sha"))
-            .select("rid")
-            .localCheckpoint()
-        )
+        changed = batch_rows.filter(
+            F.col("_old_sha").isNotNull() & (F.col("content_sha") != F.col("_old_sha"))
+        ).select("rid")
 
         # stored keys stand for every rid the batch did not re-send (its
         # content is unchanged) when they were built under this config's key
         # parameters; key-gen runs only on the records left without any —
         # the batch's rows, plus the whole state when keys/ is missing or
-        # stale. dedup=False: (rid, key) unique by construction (see
+        # stale (a keys/ table without key_params reads it as null: stale).
+        # dedup=False: (rid, key) unique by construction (see
         # blocking_keys). The union is cut before keys_dir is overwritten.
         params = key_params(cfg)
         stored_keys = (
@@ -160,7 +180,11 @@ class IncrementalLinkage:
         # fan-out (guide §2.3): the scorer only ever reads the first
         # lev_max_chars of norm (substring is idempotent, so scores are
         # bit-identical), and the full norm already lives in the state table.
-        # Cut once: the scorer's tier branches and key counts all read it
+        # Cut once with the key counts attached: the scorer's tier branches
+        # and key log all read it, and the cut measures the largest key and
+        # the chained tier's rows, so no chained tier (and none of its
+        # range-boundary jobs) is planned for a batch whose touched keys all
+        # pair in the plain join
         kwf = keys_touched.join(
             all_records.select(
                 "rid",
@@ -168,31 +192,52 @@ class IncrementalLinkage:
                 F.array_distinct("tokens").alias("tokens"),
             ),
             "rid",
-        ).localCheckpoint()
-        scored_by_key, _ = fused_block_and_score(keyed_with_counts(kwf), cfg)
-        # checkpoint: new_edges feeds the edge log, the incremental-CC touched
-        # set AND the cluster table — without this the fused scoring DAG (the
-        # batch's most expensive stage) re-executes per consumer
-        new_edges = (
-            scored_by_key.filter(F.col("score") >= cfg.score_threshold)
-            .select("id1", "id2")
-            .distinct()
+        )
+        keyed, max_kn, mega_rows = keyed_with_counts_cut(kwf, cfg.mega_key_threshold)
+        scored_by_key, _ = fused_block_and_score(
+            keyed, cfg, max_kn=max_kn, mega_rows=mega_rows
+        )
+
+        # ONE edge cut: the stored edges that survive (those incident to a
+        # content-changed rid are stale evidence) and the batch's accepted
+        # edges, with _new marking an edge this batch derived. The fused
+        # scoring DAG, the batch's most expensive stage, runs once here;
+        # the edge log, the incremental-CC inputs and the cluster table are
+        # filters of the cut
+        stored_edges = (
+            self._existing(spark, self.edges_dir, "id1 string, id2 string")
+            .join(changed.withColumnRenamed("rid", "id1"), "id1", "left_anti")
+            .join(changed.withColumnRenamed("rid", "id2"), "id2", "left_anti")
+        )
+        edges = (
+            stored_edges.withColumn("_new", F.lit(False))
+            .unionByName(
+                scored_by_key.filter(F.col("score") >= cfg.score_threshold)
+                .select("id1", "id2")
+                .withColumn("_new", F.lit(True))
+            )
+            .groupBy("id1", "id2")
+            .agg(F.max("_new").alias("_new"))
             .localCheckpoint()
         )
+        all_edges = edges.select("id1", "id2")
+        new_edges = edges.filter("_new").select("id1", "id2")
+        old_edges = edges.filter(~F.col("_new")).select("id1", "id2")
 
-        old_edges_raw = self._existing(spark, self.edges_dir, "id1 string, id2 string")
-        # drop stored edges incident to content-changed rids (stale evidence)
-        old_edges = old_edges_raw.join(
-            changed.withColumnRenamed("rid", "id1"), "id1", "left_anti"
-        ).join(changed.withColumnRenamed("rid", "id2"), "id2", "left_anti")
-        all_edges = old_edges.unionByName(new_edges).distinct().localCheckpoint()
-
-        old_clusters = self._existing(
-            spark, self.clusters_dir, "rid string, cluster_id string"
-        )
-        assignments = self._incremental_cc(
-            new_edges, old_edges, old_clusters, dirty_rids=changed
-        )
+        if self._stored(self.edges_dir) and not self._stored(self.clusters_dir):
+            # an earlier batch stopped after writing edges/ and before
+            # clusters/: no stored assignment covers the stored edges, so
+            # the incremental formula would drop them; CC runs over them all
+            assignments = connected_components(
+                all_edges, max_rounds=cfg.max_cc_rounds
+            ).assignments
+        else:
+            old_clusters = self._existing(
+                spark, self.clusters_dir, "rid string, cluster_id string"
+            )
+            assignments = self._incremental_cc(
+                new_edges, old_edges, old_clusters, dirty_rids=changed
+            )
         clusters = (
             all_records.select("rid")
             .join(assignments, "rid", "left")
@@ -224,14 +269,17 @@ class IncrementalLinkage:
         touched subgraph = every old edge whose id1 falls in a touched
         component, plus the new edges. cluster_id = min member rid is a local
         property of each component, hence identical to the full-log answer.
+
+        The formula is total, so no emptiness probe runs: an empty state has
+        no touched component, and the subgraph is the new edges alone. It
+        relies on a stored edge's endpoints having stored clusters; a state
+        with edges/ but no clusters/ (a batch that stopped between the two
+        writes) is found by a directory listing in process_batch, which runs
+        CC over the whole edge set instead of calling this.
+        `new_edges` and `old_edges` are disjoint (process_batch's edge cut
+        marks each edge once), so their union needs no distinct.
         """
         cfg = self.cfg
-        if old_clusters.isEmpty() or old_edges.isEmpty():
-            cc = connected_components(
-                old_edges.unionByName(new_edges).distinct(), max_rounds=cfg.max_cc_rounds
-            )
-            return cc.assignments
-
         ep = (
             new_edges.select(F.col("id1").alias("rid"))
             .unionByName(new_edges.select(F.col("id2").alias("rid")))
@@ -247,10 +295,8 @@ class IncrementalLinkage:
         touched_rids = old_clusters.join(
             F.broadcast(touched_cl), "cluster_id", "left_semi"
         ).select(F.col("rid").alias("id1"))
-        sub_edges = (
-            old_edges.join(touched_rids, "id1", "left_semi")
-            .unionByName(new_edges)
-            .distinct()
+        sub_edges = old_edges.join(touched_rids, "id1", "left_semi").unionByName(
+            new_edges
         )
         cc = connected_components(sub_edges, max_rounds=cfg.max_cc_rounds)
         # untouched components carry over verbatim (singleton self-rows are

@@ -22,7 +22,9 @@ Outputs under --output:
     key_drops/       parquet: the never-silent key log — every key above
                      hot_key_threshold with its size and pair strategy
                      (key, n_ids, strategy: "plain" or "chained")
-    metrics.json     row/pair/cluster counts + top cluster sizes (driver-small)
+    metrics.json     row/cluster counts, CC rounds, hot_keys (the key log's
+                     key count per pair strategy, e.g. {"plain": 44}) and
+                     top cluster sizes (driver-small)
 """
 
 from __future__ import annotations
@@ -107,7 +109,12 @@ def main(argv: list[str] | None = None) -> None:
         "rows": clusters.count(),
         "clusters": clusters.select("cluster_id").distinct().count(),
         "cc_rounds": run.cc.rounds,
-        "dropped_keys": run.key_drops.count(),
+        # every key above hot_key_threshold, by the tier that paired it;
+        # no key is dropped, so the key log counts hot keys, not drops
+        "hot_keys": {
+            r["strategy"]: r["count"]
+            for r in run.key_drops.groupBy("strategy").count().collect()
+        },
         "top_clusters": top,
     }
     _write_text(spark, f"{out}/metrics.json", json.dumps(metrics, indent=2, default=str))

@@ -154,3 +154,41 @@ def test_checkpoint_local_finish_round_is_resumable(spark, tmp_path, monkeypatch
     monkeypatch.setattr(cc, "CC_LOCAL_FINISH_MAX_EDGES", 0)
     dist = connected_components(e, checkpoint_dir=ckpt2)
     assert _comp_map(dist) == want
+
+
+def test_local_path_on_raw_edges_equals_distributed(spark, monkeypatch):
+    """The single-task path reads the caller's edges as they are —
+    duplicates, both orientations, a node whose only edge is a self-loop —
+    and gives the distributed path's rows: no row for the self-loop-only
+    node, and the same round count."""
+    e = _edges(
+        spark,
+        [("b", "a"), ("a", "b"), ("a", "b"), ("a", "c"), ("c", "a"),
+         ("z", "z"), ("e", "d"), ("d", "e"), ("d", "d")],
+    )
+
+    def rows(res):
+        return sorted((r["rid"], r["component"]) for r in res.assignments.collect())
+
+    local = connected_components(e)
+    monkeypatch.setattr(cc, "CC_LOCAL_FINISH_MAX_EDGES", 0)
+    dist = connected_components(e)
+    want = [("a", "a"), ("b", "a"), ("c", "a"), ("d", "d"), ("e", "d")]
+    assert rows(local) == rows(dist) == want
+    assert local.rounds == dist.rounds == 1
+    assert local.converged and dist.converged
+
+
+def test_local_path_cuts_once_and_counts_on_the_cut(spark):
+    """Below the bound CC takes one cut of the raw edges, whose count is
+    observed on the cut itself: building the result runs only that cut's
+    jobs, and reading the assignments adds one single-task job."""
+    from conftest import jobs_run
+
+    e = _chain_plus_cliques(spark)
+    res, built = jobs_run(spark, lambda: connected_components(e))
+    _, plain_cut = jobs_run(spark, lambda: e.localCheckpoint())
+    assert built == plain_cut
+    assert len(res.checkpoints) == 1
+    _, read = jobs_run(spark, lambda: res.assignments.collect())
+    assert read == 1

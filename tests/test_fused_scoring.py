@@ -189,3 +189,53 @@ def test_measured_max_kn_matches_all_tier_build(spark, base, tiers):
     live = tiers == "hot_and_chained_live"
     assert ("_cn2" in executed_plan(measured)) == live  # the chain's join column
     kwf.unpersist()
+
+
+def _write_documents(spark, sf_dir):
+    """A documents.parquet of near-duplicate families (five variants of
+    each of 8 texts) plus singletons, so some blocking keys hold more than
+    three members."""
+    import random
+
+    rng = random.Random(5)
+    vocab = [f"w{i}" for i in range(300)]
+    rows, doc_id = [], 0
+    for _ in range(8):
+        base = rng.sample(vocab, 24)
+        for _ in range(5):
+            words = list(base)
+            words[rng.randrange(len(words))] = rng.choice(vocab)
+            rows.append((doc_id, " ".join(words), "en", f"src{doc_id % 3}"))
+            doc_id += 1
+    for _ in range(20):
+        rows.append((doc_id, " ".join(rng.sample(vocab, 24)), "en", "src0"))
+        doc_id += 1
+    spark.createDataFrame(
+        rows, "doc_id long, text string, lang string, source string"
+    ).coalesce(1).write.parquet(f"{sf_dir}/documents.parquet")
+
+
+def test_er_chained_pairs_leaves_no_cache(spark, tmp_path):
+    """er_chained_pairs cuts its keyed input instead of persisting it, so
+    the session's cache manager is empty after the query; the rows equal
+    the persisted build with both tiers planned (max_kn=None)."""
+    from bela_spark import queries
+
+    sf = str(tmp_path)
+    _write_documents(spark, sf)
+    spark.catalog.clearCache()
+    got = sorted(tuple(r) for r in queries.er_chained_pairs(spark, sf).collect())
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+    cfg = LinkageConfig(hot_key_threshold=2, mega_key_threshold=3, chain_window=2)
+    recs = queries._records(spark, sf).select(
+        "doc_id",
+        F.substring("norm", 1, cfg.lev_max_chars).alias("norm"),
+        F.array_distinct("tokens").alias("tokens"),
+    )
+    keyed = keyed_with_counts(queries._all_keys(spark, sf).join(recs, "doc_id")).persist()
+    assert keyed.filter(F.col("_kn") > cfg.mega_key_threshold).count() > 0
+    scored, _ = fused_block_and_score(keyed, cfg, id_col="doc_id")
+    want = sorted(tuple(r) for r in scored.select("id1", "id2", "key").distinct().collect())
+    keyed.unpersist()
+    assert got == want and got

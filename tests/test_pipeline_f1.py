@@ -202,3 +202,28 @@ def test_release_frees_every_rdd_the_run_holds(
     assert persistent() - before, "the run holds no cache or checkpoint"
     run.release()
     assert not persistent() - before
+
+
+def test_counts_gate_reads_its_numbers_off_one_cut(spark, fixture_df, monkeypatch):
+    """The counts gate is one observed cut of the key counts: the eager part
+    of run_linkage before CC (records cut, counts gate, pair-stage input
+    cut) runs 9 jobs on this fixture, where two caches plus a first()
+    ran 11. CC is stubbed lazy so only the gate's side is counted."""
+    from conftest import jobs_run
+
+    import bela_spark.pipeline as pipeline_mod
+    from bela_spark.operators.cc import CCResult
+
+    def lazy_cc(edges, **_):
+        return CCResult(
+            edges.select(F.col("id1").alias("rid"), F.col("id2").alias("component")),
+            rounds=0,
+            converged=True,
+        )
+
+    monkeypatch.setattr(pipeline_mod, "connected_components", lazy_cc)
+    run, jobs = jobs_run(
+        spark, lambda: run_linkage(fixture_df.drop("group_id"), LinkageConfig())
+    )
+    run.release()
+    assert jobs <= 9

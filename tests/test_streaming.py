@@ -254,8 +254,116 @@ def test_state_without_valid_keys_is_rekeyed(spark, tmp_path, monkeypatch, state
     assert params == {key_params(inc.cfg)}
 
 
+@pytest.mark.slow
+def test_state_with_edges_but_no_clusters_runs_full_cc(spark, tmp_path):
+    """A state whose edges/ was written without clusters/ (a batch that
+    stopped between the two writes) still clusters the stored edges: the
+    next batch runs CC over the whole edge set, and the clusters equal one
+    batch run over the union."""
+    import shutil
+
+    df, first, second = _two_batches(spark)
+    inc = IncrementalLinkage(str(tmp_path / "state"))
+    inc.process_batch(first, 0)
+    shutil.rmtree(inc.clusters_dir)
+    inc.process_batch(second, 1)
+    streamed = spark.read.parquet(inc.clusters_dir)
+    assert _partitions(streamed) == _partitions(run_linkage(df, LinkageConfig()).clusters)
+
+
 def test_idf_config_is_rejected(tmp_path):
     """Streaming IDF is out of scope: an IDF config fails at construction,
     not later inside the pair stage."""
     with pytest.raises(ValueError, match="streaming IDF"):
         IncrementalLinkage(str(tmp_path / "state"), LinkageConfig.at_scale())
+
+
+def test_existing_reads_a_stored_table_without_a_job(spark, tmp_path):
+    """State tables are read with their stored schema, so no footer
+    inference job runs; a column the files lack (keys/ written before
+    key_params existed) reads as null, i.e. stale."""
+    from conftest import jobs_run
+
+    inc = IncrementalLinkage(str(tmp_path / "state"))
+    spark.createDataFrame([("a", "b")], "id1 string, id2 string").write.parquet(
+        inc.edges_dir
+    )
+    spark.createDataFrame([("a", "k")], "rid string, key string").write.parquet(
+        inc.keys_dir
+    )
+    (edges, keys), jobs = jobs_run(
+        spark,
+        lambda: (
+            inc._existing(spark, inc.edges_dir, "id1 string, id2 string"),
+            inc._existing(spark, inc.keys_dir, "rid string, key string, key_params string"),
+        ),
+    )
+    assert jobs == 0
+    assert [tuple(r) for r in edges.collect()] == [("a", "b")]
+    assert [tuple(r) for r in keys.collect()] == [("a", "k", None)]
+
+
+def test_observed_gates_return_on_empty_input(spark, tmp_path):
+    """Every gate that reads its numbers off an observed cut (run_linkage's
+    counts gate, the micro-batch's pair-stage tiers, CC's single-task test)
+    returns on an empty input instead of waiting for metrics (CC alone:
+    test_cc.py::test_empty_edges)."""
+    cols = "repo string, path string, commit string, lang string, content string"
+    empty = spark.createDataFrame([], cols)
+    run = run_linkage(empty, LinkageConfig())
+    assert run.clusters.count() == 0 and run.cc.rounds == 0
+    run.release()
+    inc = IncrementalLinkage(str(tmp_path / "state"))
+    inc.process_batch(empty, 0)
+    assert spark.read.parquet(inc.clusters_dir).count() == 0
+    assert spark.read.parquet(inc.edges_dir).count() == 0
+
+
+@pytest.mark.slow
+def test_measured_tiers_match_both_tiers_forced(spark, tmp_path, monkeypatch):
+    """A micro-batch whose touched keys include one above
+    mega_key_threshold writes the same edges/ and clusters/ as a build that
+    plans both pair tiers (max_kn=None)."""
+    from bela_spark.streaming import ingest
+
+    cfg = LinkageConfig(hot_key_threshold=2, mega_key_threshold=3, chain_window=2)
+    _, first, second = _two_batches(spark)
+    real = ingest.fused_block_and_score
+    seen = []
+
+    def measured(keyed, cfg, **kw):
+        seen.append(kw["max_kn"])
+        return real(keyed, cfg, **kw)
+
+    def forced(keyed, cfg, **kw):
+        return real(keyed, cfg, **{**kw, "max_kn": None, "mega_rows": None})
+
+    def build(name, scorer):
+        monkeypatch.setattr(ingest, "fused_block_and_score", scorer)
+        inc = IncrementalLinkage(str(tmp_path / name), cfg)
+        inc.process_batch(first, 0)
+        inc.process_batch(second, 1)
+
+        def rows(path):
+            return sorted(tuple(r) for r in spark.read.parquet(path).collect())
+
+        return rows(inc.edges_dir), rows(inc.clusters_dir)
+
+    got = build("measured", measured)
+    assert seen[1] > cfg.mega_key_threshold
+    assert got == build("forced", forced)
+
+
+@pytest.mark.slow
+def test_micro_batch_job_budget(spark, tmp_path):
+    """One micro-batch of the two-batch fixture stays within the measured
+    job count: 43 jobs for the first batch and 40 for the second (61 before
+    the gates read observed cuts, the edge set became one cut and CC's
+    small graphs went straight to one task)."""
+    from conftest import jobs_run
+
+    _, first, second = _two_batches(spark)
+    inc = IncrementalLinkage(str(tmp_path / "state"))
+    _, jobs0 = jobs_run(spark, lambda: inc.process_batch(first, 0))
+    _, jobs1 = jobs_run(spark, lambda: inc.process_batch(second, 1))
+    assert jobs0 <= 43 and jobs1 <= 40

@@ -60,6 +60,10 @@ def test_spark_submit_py_files_linkage(tmp_path):
     assert metrics["rows"] == 600
     assert 0 < metrics["clusters"] <= 600
     assert metrics["cc_rounds"] >= 1
+    # the key log counts hot keys per pair tier; the fused stage drops none
+    assert "dropped_keys" not in metrics
+    assert set(metrics["hot_keys"]) <= {"plain", "chained"}
+    assert all(n > 0 for n in metrics["hot_keys"].values())
     assert len(metrics["top_clusters"]) > 0
     # clusters parquet is lang-partitioned and complete
     assert any((out / "clusters").glob("lang=*"))
