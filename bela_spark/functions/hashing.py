@@ -10,6 +10,18 @@ cluster scale the md5 cost is negligible next to the shuffle it saves.
 All operators here are DataFrame -> DataFrame with only built-in functions —
 the explode/groupBy shapes give Catalyst partial aggregation (map-side combine
 of the per-seed min) for free.
+
+Why the key-gen functions write Spark SQL text (F.expr / selectExpr)
+instead of composing F.* calls: every F.* call is three py4j round trips
+from Python to the JVM (two reflection lookups and the call), and every
+argument is more. Key-gen is a few hundred such calls — 16 minhash
+aggregates, 4 band structs, the shingle lambda — so composing it the F.* way
+cost ~1,500 round trips, about a quarter of a second per linkage pass or
+ingest micro-batch on a 4-core box, paid again on every repeat because
+nothing is cached. SQL text is parsed in the JVM in one call per expression and
+analyses to the same expressions, so the plans are unchanged. Literals must
+keep their F.lit types: doubles are written `1.0D` (bare `1.0` is a
+DECIMAL in Spark SQL) and longs `0L`.
 """
 
 from __future__ import annotations
@@ -30,12 +42,9 @@ def minhash_wide(
     partial aggregate, so the shuffle carries exactly one num_hashes-column
     row per record regardless of document length (no seed explode).
     """
-    sh = df.select(
-        F.col(id_col),
-        F.explode(F.array_distinct(F.col(shingles_col))).alias("shingle"),
-    )
+    sh = df.selectExpr(id_col, f"explode(array_distinct({shingles_col})) AS shingle")
     aggs = [
-        F.min(F.md5(F.concat_ws("#", F.col("shingle"), F.lit(str(s))))).alias(f"mh{s}")
+        F.expr(f"min(md5(concat_ws('#', shingle, '{s}'))) AS mh{s}")
         for s in range(num_hashes)
     ]
     return sh.groupBy(id_col).agg(*aggs)
@@ -49,14 +58,9 @@ def minhash_signatures(
 ) -> DataFrame:
     """(id, seed, mh): exploded view of minhash_wide (for queries/oracles)."""
     wide = minhash_wide(df, id_col, shingles_col, num_hashes)
-    structs = F.array(
-        *[
-            F.struct(F.lit(s).alias("seed"), F.col(f"mh{s}").alias("mh"))
-            for s in range(num_hashes)
-        ]
-    )
-    return wide.select(id_col, F.explode(structs).alias("x")).select(
-        id_col, F.col("x.seed").alias("seed"), F.col("x.mh").alias("mh")
+    structs = ", ".join(f"struct({s} AS seed, mh{s} AS mh)" for s in range(num_hashes))
+    return wide.selectExpr(id_col, f"explode(array({structs})) AS x").selectExpr(
+        id_col, "x.seed AS seed", "x.mh AS mh"
     )
 
 
@@ -72,25 +76,18 @@ def band_keys(
     Records sharing any band key become candidate pairs — the LSH OR-of-ANDs
     construction. band_key strings are uniform-random, so the downstream
     equi-join keys are naturally well-distributed except for true mega-groups
-    (handled by salting in operators/pairs.py).
+    (handled by the chained tier in operators/scoring.py).
     """
     assert num_hashes % band_size == 0, "num_hashes must be divisible by band_size"
     n_bands = num_hashes // band_size
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        "|", *[F.col(f"mh{b * band_size + i}") for i in range(band_size)]
-                    )
-                ).alias("band_key"),
-            )
-            for b in range(n_bands)
-        ]
-    )
-    return wide.select(id_col, F.explode(bands).alias("x")).select(
-        id_col, F.col("x.band").alias("band"), F.col("x.band_key").alias("band_key")
+
+    def band(b: int) -> str:
+        mhs = ", ".join(f"mh{b * band_size + i}" for i in range(band_size))
+        return f"struct({b} AS band, md5(concat_ws('|', {mhs})) AS band_key)"
+
+    bands = ", ".join(band(b) for b in range(n_bands))
+    return wide.selectExpr(id_col, f"explode(array({bands})) AS x").selectExpr(
+        id_col, "x.band AS band", "x.band_key AS band_key"
     )
 
 

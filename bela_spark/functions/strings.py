@@ -17,14 +17,19 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 
 
-def lev_sim(a: Column | str, b: Column | str) -> Column:
-    """Normalized Levenshtein similarity in [0,1]; JVM built-in, codegen'd."""
-    ca = F.col(a) if isinstance(a, str) else a
-    cb = F.col(b) if isinstance(b, str) else b
-    denom = F.greatest(F.length(ca), F.length(cb))
-    return F.when(denom == 0, F.lit(1.0)).otherwise(
-        1.0 - F.levenshtein(ca, cb) / denom.cast("double")
+def lev_sim_sql(a: str, b: str) -> str:
+    """Normalized Levenshtein similarity in [0,1] as Spark SQL text over two
+    SQL string expressions; JVM built-in, codegen'd."""
+    denom = f"greatest(length({a}), length({b}))"
+    return (
+        f"CASE WHEN {denom} = 0 THEN 1.0D "
+        f"ELSE 1.0D - levenshtein({a}, {b}) / CAST({denom} AS DOUBLE) END"
     )
+
+
+def lev_sim(a: str, b: str) -> Column:
+    """lev_sim_sql parsed into a Column."""
+    return F.expr(lev_sim_sql(a, b))
 
 
 def _jaro(s1: str, s2: str) -> float:

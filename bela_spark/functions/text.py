@@ -12,49 +12,64 @@ from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
 
+# The functions below come in two forms: `<name>_sql` returns Spark SQL
+# text over SQL text (a column name is the simplest such text), and `<name>`
+# parses that text once into a Column with F.expr. Composition happens on
+# the text, so a whole nested expression costs one parse in the JVM instead
+# of several py4j round trips per F.* call (see functions/hashing.py for why
+# that matters on the linkage hot path).
 
-def normalized(col: Column | str) -> Column:
+
+def normalized_sql(col: str) -> str:
     """Lowercase, collapse all non-alphanumeric runs to single spaces, trim.
 
     Analogue of insert_spaces + lowercasing in the reference transform chain
     (bela/transforms/joint_el_transform.py:23-69).
     """
-    c = F.lower(F.col(col) if isinstance(col, str) else col)
-    return F.trim(F.regexp_replace(c, r"[^a-z0-9]+", " "))
+    return f"trim(regexp_replace(lower({col}), '[^a-z0-9]+', ' '))"
 
 
-def tokens_of(norm_col: Column | str) -> Column:
+def normalized(col: str) -> Column:
+    return F.expr(normalized_sql(col))
+
+
+def tokens_sql(norm: str) -> str:
     """Whitespace tokens of an already-normalized string (T4 analogue)."""
-    c = F.col(norm_col) if isinstance(norm_col, str) else norm_col
-    return F.when(F.length(c) == 0, F.array().cast("array<string>")).otherwise(
-        F.split(c, " ")
+    return (
+        f"CASE WHEN length({norm}) = 0 THEN CAST(array() AS ARRAY<STRING>) "
+        f"ELSE split({norm}, ' ') END"
     )
 
 
-def shingles_of(tokens_col: Column | str, k: int = 3) -> Column:
+def tokens_of(norm: str) -> Column:
+    return F.expr(tokens_sql(norm))
+
+
+def shingles_sql(tokens: str, k: int = 3) -> str:
     """k-token shingles; short texts fall back to one whole-text shingle.
 
     Candidate-span generation in the reference enumerates (start, end) windows
     (bela/task/joint_el_task.py:244-290); shingling is the same sliding-window
     enumeration expressed with sequence+transform+slice — no UDF.
     """
-    t = F.col(tokens_col) if isinstance(tokens_col, str) else tokens_col
-    n = F.size(t)
-    sliding = F.transform(
-        F.sequence(F.lit(1), n - (k - 1)),
-        lambda i: F.concat_ws(" ", F.slice(t, i, k)),
+    return (
+        f"CASE WHEN size({tokens}) >= {k} THEN transform(sequence(1, size({tokens}) - {k - 1}), "
+        f"x -> concat_ws(' ', slice({tokens}, x, {k}))) "
+        f"ELSE array(concat_ws(' ', {tokens})) END"
     )
-    return F.when(n >= k, sliding).otherwise(F.array(F.concat_ws(" ", t)))
 
 
-def record_id(*cols: Column | str) -> Column:
+def shingles_of(tokens: str, k: int = 3) -> Column:
+    return F.expr(shingles_sql(tokens, k))
+
+
+def record_id(*cols: str) -> Column:
     """Stable content-addressed record id: sha256 of '||'-joined key columns.
 
     String ids keep min()-based connected components well-defined at any scale
     (no 64-bit collision risk at 10^12 rows).
     """
-    cs = [F.col(c) if isinstance(c, str) else c for c in cols]
-    return F.sha2(F.concat_ws("||", *cs), 256)
+    return F.expr(f"sha2(concat_ws('||', {', '.join(cols)}), 256)")
 
 
 # Small multilingual stopword lists for the heuristic language-ID operator.

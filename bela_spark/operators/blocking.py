@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from bela_spark.config import LinkageConfig
 from bela_spark.functions.hashing import band_keys, minhash_wide
-from bela_spark.functions.text import normalized, shingles_of, tokens_of
+from bela_spark.functions.text import normalized, shingles_sql, tokens_of
 
 
 def with_record_columns(df: DataFrame, cfg: LinkageConfig, content_col: str = "content") -> DataFrame:
@@ -27,32 +27,24 @@ def with_record_columns(df: DataFrame, cfg: LinkageConfig, content_col: str = "c
     (BASELINE.json input_hint): sha256 of the raw content, untouched by
     normalization.
     """
-    return (
-        df.withColumn("content_sha", F.sha2(F.col(content_col), 256))
-        .withColumn("norm", normalized(content_col))
-        .withColumn("tokens", tokens_of("norm"))
-    )
+    return df.withColumns(
+        {"content_sha": F.expr(f"sha2({content_col}, 256)"), "norm": normalized(content_col)}
+    ).withColumn("tokens", tokens_of("norm"))
 
 
 def prefix_keys(records: DataFrame, cfg: LinkageConfig, id_col: str = "rid") -> DataFrame:
     """(rid, key): 'pfx:' + first cfg.prefix_len normalized tokens."""
-    return records.select(
-        id_col,
-        F.concat(
-            F.lit("pfx:"), F.concat_ws(" ", F.slice("tokens", 1, cfg.prefix_len))
-        ).alias("key"),
-    ).filter(F.length("key") > 4)
+    return records.selectExpr(
+        id_col, f"concat('pfx:', concat_ws(' ', slice(tokens, 1, {cfg.prefix_len}))) AS key"
+    ).filter("length(key) > 4")
 
 
 def lsh_keys(records: DataFrame, cfg: LinkageConfig, id_col: str = "rid") -> DataFrame:
     """(rid, key): 'mh:<band>:<bandkey>' MinHash-LSH band keys."""
-    sh = records.select(id_col, shingles_of("tokens", cfg.shingle_k).alias("shingles"))
+    sh = records.selectExpr(id_col, f"{shingles_sql('tokens', cfg.shingle_k)} AS shingles")
     wide = minhash_wide(sh, id_col=id_col, shingles_col="shingles", num_hashes=cfg.num_minhashes)
     bk = band_keys(wide, id_col=id_col, num_hashes=cfg.num_minhashes, band_size=cfg.band_size)
-    return bk.select(
-        id_col,
-        F.concat(F.lit("mh:"), F.col("band").cast("string"), F.lit(":"), F.col("band_key")).alias("key"),
-    )
+    return bk.selectExpr(id_col, "concat('mh:', CAST(band AS STRING), ':', band_key) AS key")
 
 
 def blocking_keys(

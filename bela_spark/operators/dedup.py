@@ -1,62 +1,20 @@
-"""Deduplication operators over a document table (SURVEY.md SET family +
-training-data-pipeline extensions): exact, MinHash-LSH, SimHash, n-gram
-Jaccard, embedding-cosine near-dup.
+"""Near-duplicate pair operators (SURVEY.md SET family + training-data-
+pipeline extensions): SimHash pairs over capped pigeonhole blocks and
+embedding-cosine pairs.
 
-All take a records DataFrame carrying (rid/doc_id, norm, tokens) as produced
-by operators.blocking.with_record_columns and return plain DataFrames; every
-shape is an explode/groupBy/join Catalyst can push down and re-plan.
+All return plain DataFrames; every shape is an explode/groupBy/join
+Catalyst can push down and re-plan. Exact and MinHash-LSH dedup are the
+linkage pipeline's own stages (run_linkage's exact collapse and
+operators/blocking.py); the query surface replays n-gram Jaccard and
+SimHash fingerprints in bela_spark/queries.py.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window as W, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-from bela_spark.config import LinkageConfig
-from bela_spark.functions.hashing import (
-    band_keys,
-    hamming32,
-    minhash_wide,
-    simhash_fp,
-)
-from bela_spark.functions.text import shingles_of
+from bela_spark.functions.hashing import hamming32
 from bela_spark.functions.vectors import cosine_sim
-
-
-def exact_duplicates(df: DataFrame, content_col: str = "content", id_col: str = "rid") -> DataFrame:
-    """Hash-groupBy exact dedup: (content_sha, n_dups, keeper).
-
-    Keeper = min id (deterministic). One shuffle on the 256-bit content hash —
-    uniformly distributed, no skew by construction.
-    """
-    return (
-        df.select(F.sha2(F.col(content_col), 256).alias("content_sha"), F.col(id_col))
-        .groupBy("content_sha")
-        .agg(F.count("*").alias("n_dups"), F.min(id_col).alias("keeper"))
-    )
-
-
-def minhash_lsh_pairs(
-    records: DataFrame, cfg: LinkageConfig, id_col: str = "rid"
-) -> DataFrame:
-    """Near-dup candidate pairs via MinHash banding: (id1, id2) distinct."""
-    sh = records.select(id_col, shingles_of("tokens", cfg.shingle_k).alias("shingles"))
-    wide = minhash_wide(sh, id_col=id_col, num_hashes=cfg.num_minhashes)
-    bk = band_keys(wide, id_col=id_col, num_hashes=cfg.num_minhashes, band_size=cfg.band_size)
-    keys = bk.select(id_col, F.concat_ws(":", "band", "band_key").alias("key"))
-    a, b = keys.alias("a"), keys.alias("b")
-    return (
-        a.join(b, "key")
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(F.col(f"a.{id_col}").alias("id1"), F.col(f"b.{id_col}").alias("id2"))
-        .distinct()
-    )
-
-
-def simhash_fingerprints(
-    records: DataFrame, id_col: str = "rid", bits: int = 63
-) -> DataFrame:
-    """(id, simhash) fingerprints (63-bit by default), JVM-side."""
-    return records.select(id_col, simhash_fp("tokens", bits).alias("simhash"))
 
 
 def simhash_blocks(bits: int, max_hamming: int) -> list[tuple[int, int, int]]:
@@ -144,37 +102,6 @@ def simhash_block_drops(
 
     halves = _simhash_block_keys(fingerprints, max_hamming, id_col, bits)
     return key_drop_log(halves, block_cap, key_col="hkey")
-
-
-def ngram_jaccard_pairs(
-    records: DataFrame,
-    cfg: LinkageConfig,
-    min_jaccard: float = 0.5,
-    id_col: str = "rid",
-) -> DataFrame:
-    """Exact n-gram Jaccard over LSH candidates: (id1, id2, jaccard).
-
-    LSH bounds the pair space; the exact Jaccard then verifies — same
-    bound-then-verify shape as the reference's retrieve-then-score
-    (bela/task/joint_el_task.py:658-690 then 766-890).
-    """
-    cand = minhash_lsh_pairs(records, cfg, id_col)
-    sh = records.select(
-        F.col(id_col),
-        F.array_distinct(shingles_of("tokens", cfg.shingle_k)).alias("sh"),
-    )
-    j = (
-        cand.join(sh.withColumnRenamed(id_col, "id1").withColumnRenamed("sh", "sh1"), "id1")
-        .join(sh.withColumnRenamed(id_col, "id2").withColumnRenamed("sh", "sh2"), "id2")
-        .withColumn(
-            "jaccard",
-            F.when(F.size(F.array_union("sh1", "sh2")) == 0, F.lit(1.0)).otherwise(
-                F.size(F.array_intersect("sh1", "sh2"))
-                / F.size(F.array_union("sh1", "sh2")).cast("double")
-            ),
-        )
-    )
-    return j.filter(F.col("jaccard") >= min_jaccard).select("id1", "id2", "jaccard")
 
 
 def embedding_near_dup_pairs(

@@ -1,4 +1,4 @@
-"""Entity-linking query surface (SURVEY.md T13, W1/W3, J5/J6, A1/A2/A8).
+"""Entity-linking query surface (SURVEY.md T13, W1/W3, J5/J6, A1/A2).
 
 These are the reference's evaluation-side operators as standalone DataFrame
 queries: document windowing, top-k span pruning, overlapping-prediction
@@ -171,18 +171,3 @@ def bag_of_entities_f1(pred: DataFrame, gold: DataFrame, id_col: str = "doc_id")
         ((1 - F.coalesce("in_pred", F.lit(0))) * F.coalesce("in_gold", F.lit(0))).alias("fn"),
     )
     return micro_prf1(matched)
-
-
-def threshold_grid(scored: DataFrame, thresholds: list[float]) -> DataFrame:
-    """A8 analogue (scripts/grid_search_thresholds.py:23-36): edge count per
-    threshold from one cached scored-pairs pass — scores don't depend on the
-    threshold, so the grid is a crossJoin, not a recompute."""
-    spark = scored.sparkSession
-    t = spark.createDataFrame([(float(x),) for x in thresholds], "threshold double")
-    return (
-        scored.crossJoin(F.broadcast(t))
-        .filter(F.col("score") >= F.col("threshold"))
-        .groupBy("threshold")
-        .agg(F.count("*").alias("n_edges"))
-        .orderBy("threshold")
-    )

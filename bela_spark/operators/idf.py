@@ -227,7 +227,15 @@ def _weight_tokens_packed_broadcast(
     never a float log."""
     if IDF_BROADCAST_MAX_TOKENS <= 0:
         return None
-    from pyspark.sql.types import ArrayType, IntegerType, LongType, ShortType, ByteType
+    from pyspark.sql.types import (
+        ArrayType,
+        ByteType,
+        IntegerType,
+        LongType,
+        ShortType,
+        StructField,
+        StructType,
+    )
 
     tok_field = df.schema[token_col]
     if not isinstance(tok_field.dataType, ArrayType) or not isinstance(
@@ -242,16 +250,16 @@ def _weight_tokens_packed_broadcast(
     # plan's scalar subquery) as the null token's row. limit(bound+2) caps
     # the collect: a vocabulary past the bound falls back before
     # materializing more than one excess row on the driver.
-    elem = tok_field.dataType.elementType
-    marked = F.concat(
-        F.array(F.lit(None).cast(elem)),
-        F.coalesce(F.col(token_col), F.array().cast(ArrayType(elem))),
+    elem = tok_field.dataType.elementType.simpleString()
+    marked = (
+        f"concat(array(CAST(NULL AS {elem})), "
+        f"coalesce({token_col}, CAST(array() AS ARRAY<{elem}>)))"
     )
     dfreq = (
-        df.select(F.posexplode(marked).alias("_pos", "_t"))
-        .where((F.col("_pos") == 0) | F.col("_t").isNotNull())
+        df.selectExpr(f"posexplode({marked}) AS (_pos, _t)")
+        .where("_pos = 0 OR _t IS NOT NULL")
         .groupBy("_t")
-        .agg(F.count("*").alias("_df"))
+        .agg(F.expr("count(*) AS _df"))
     )
     # Arrow, not pandas: a null in an integer column would turn the pandas
     # column into float64
@@ -276,13 +284,16 @@ def _weight_tokens_packed_broadcast(
 
     # the legacy join's column order (join key first, then the other input
     # columns, then the weighted pair), so the schema never depends on which
-    # branch of the gate ran
+    # branch of the gate ran; built in Python from the schema already
+    # fetched, not by analysing a projection
     cols = [id_col] + [c for c in df.columns if c not in (id_col, token_col)]
-    out_schema = df.select(
-        *cols,
-        F.expr("array(cast(0 as long))").alias(token_col),
-        F.lit(0).cast("long").alias(ws_col),
-    ).schema
+    out_schema = StructType(
+        [df.schema[c] for c in cols]
+        + [
+            StructField(token_col, ArrayType(LongType(), False), False),
+            StructField(ws_col, LongType(), False),
+        ]
+    )
 
     def weigh(batches):
         import pandas as pd
@@ -366,7 +377,7 @@ def weighted_jaccard_cols(
     return size_bound, wjac
 
 
-def weighted_jaccard_packed_ix_staged(
+def weighted_jaccard_packed_ix_staged_sql(
     t1: str = "t1",
     t2: str = "t2",
     s1: str = "s1",
@@ -413,27 +424,35 @@ def weighted_jaccard_packed_ix_staged(
     Contract: project `ix_expr` gated as column `ix` (null when gated off),
     drop t1/t2, project `wi_expr` as `wi`, then apply `wjac_expr` (reads
     `wi`). Null/empty semantics: gated-off -> null wi; empty intersection
-    -> 0."""
-    ws1, ws2 = F.col(s1), F.col(s2)
-    size_bound = F.when(F.greatest(ws1, ws2) == 0, F.lit(1.0)).otherwise(
-        F.least(ws1, ws2) / F.greatest(ws1, ws2).cast("double")
+    -> 0.
+
+    Built as Spark SQL text (see functions/hashing.py for why);
+    weighted_jaccard_packed_ix_staged parses the same four texts into
+    Columns."""
+    size_bound = (
+        f"CASE WHEN greatest({s1}, {s2}) = 0 THEN 1.0D "
+        f"ELSE least({s1}, {s2}) / CAST(greatest({s1}, {s2}) AS DOUBLE) END"
     )
-    ix_expr = F.array_intersect(F.col(t1), F.col(t2))
-    ixc = F.col(ix)
+    ix_expr = f"array_intersect({t1}, {t2})"
     wi_expr = (
-        F.when(ixc.isNull(), F.lit(None).cast("long"))
-        .when(
-            F.size(ixc) > 0,
-            F.aggregate(
-                ixc,
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x.bitwiseAND(F.lit(63)),
-            ),
-        )
-        .otherwise(F.lit(0).cast("long"))
+        f"CASE WHEN {ix} IS NULL THEN CAST(NULL AS BIGINT) "
+        f"WHEN size({ix}) > 0 THEN aggregate({ix}, 0L, (x, y) -> x + (y & 63)) "
+        "ELSE 0L END"
     )
-    wic = F.col(wi)
-    wu = ws1 + ws2 - wic
-    wjac_expr = F.when(wu <= 0, F.lit(1.0)).otherwise(wic / wu.cast("double"))
+    wu = f"{s1} + {s2} - {wi}"
+    wjac_expr = f"CASE WHEN {wu} <= 0 THEN 1.0D ELSE {wi} / CAST({wu} AS DOUBLE) END"
     return size_bound, ix_expr, wi_expr, wjac_expr
 
+
+def weighted_jaccard_packed_ix_staged(
+    t1: str = "t1",
+    t2: str = "t2",
+    s1: str = "s1",
+    s2: str = "s2",
+    ix: str = "_ix",
+    wi: str = "_wi",
+):
+    """weighted_jaccard_packed_ix_staged_sql as Columns."""
+    return tuple(
+        F.expr(e) for e in weighted_jaccard_packed_ix_staged_sql(t1, t2, s1, s2, ix, wi)
+    )

@@ -14,17 +14,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from bela_spark.config import LinkageConfig
-from bela_spark.functions.strings import lev_sim
+from bela_spark.functions.strings import lev_sim_sql
 from bela_spark.functions.vectors import cosine_sim
-from bela_spark.operators.idf import weighted_jaccard_packed_ix_staged
+from bela_spark.operators.idf import weighted_jaccard_packed_ix_staged_sql
 
 
 def accept_edges(scored: DataFrame, cfg: LinkageConfig) -> DataFrame:
     """Threshold gate (P3 analogue, md/el thresholds joint_el_task.py:1132-1142)
     -> edge set for clustering (C1)."""
     return (
-        scored.filter(F.col("score") >= F.lit(cfg.score_threshold))
-        .select("id1", "id2")
+        scored.filter(f"score >= {cfg.score_threshold!r}D")
+        .selectExpr("id1", "id2")
         .distinct()
     )
 
@@ -61,7 +61,9 @@ def _score_exprs(df: DataFrame, cfg: LinkageConfig, use_cosine: bool) -> DataFra
     IDF-weighted jaccard and the stage-1 gate uses the weight-sum ratio
     bound — same exactness argument, weights instead of cardinalities."""
     m = cfg.lev_max_chars
-    gate = jaccard_gate(cfg, use_cosine)
+    # SQL text throughout (see functions/hashing.py); doubles carry the D
+    # suffix, since a bare 1.0 is a DECIMAL in Spark SQL
+    gate = f"{jaccard_gate(cfg, use_cosine)!r}D"
     # Both kernels stage the intersection into its own projected column so
     # the O(|t1|+|t2|) array work runs ONCE per pair. A single CASE expression
     # references the intersection in the zero-union test, the numerator and
@@ -84,43 +86,39 @@ def _score_exprs(df: DataFrame, cfg: LinkageConfig, use_cosine: bool) -> DataFra
         # the 1.43x 4->16-thread per-pair CPU inflation (BASELINE.md
         # "Round-5 scaling measurement").
         size_bound, ix_expr, wi_expr, jac_from_wi = (
-            weighted_jaccard_packed_ix_staged("t1", "t2", "s1", "s2")
+            weighted_jaccard_packed_ix_staged_sql("t1", "t2", "s1", "s2")
         )
         out = (
-            df.withColumn("_ix", F.when(size_bound >= F.lit(gate), ix_expr))
+            df.withColumn("_ix", F.expr(f"CASE WHEN {size_bound} >= {gate} THEN {ix_expr} END"))
             .drop("t1", "t2")
-            .withColumn("_wi", wi_expr)
+            .withColumn("_wi", F.expr(wi_expr))
             .drop("_ix")
         )
     else:
-        s1, s2 = F.size("t1"), F.size("t2")
-        size_bound = F.when(
-            F.greatest(s1, s2) == 0, F.lit(1.0)
-        ).otherwise(F.least(s1, s2) / F.greatest(s1, s2).cast("double"))
-        wi_expr = F.size(F.array_intersect("t1", "t2")).cast("long")
+        s1, s2 = "size(t1)", "size(t2)"
+        size_bound = (
+            f"CASE WHEN greatest({s1}, {s2}) = 0 THEN 1.0D "
+            f"ELSE least({s1}, {s2}) / CAST(greatest({s1}, {s2}) AS DOUBLE) END"
+        )
+        wi_expr = "CAST(size(array_intersect(t1, t2)) AS BIGINT)"
         # t1/t2 are distinct arrays (caller contract), so |union| =
         # |t1| + |t2| - |intersect| — no second array op, same integers
-        ju = (s1 + s2).cast("long") - F.col("_wi")
-        jac_from_wi = F.when(ju <= 0, F.lit(1.0)).otherwise(
-            F.col("_wi") / ju.cast("double")
-        )
-        out = df.withColumn("_wi", F.when(size_bound >= F.lit(gate), wi_expr))
-    out = out.withColumn(
-        "f_jac", F.when(F.col("_wi").isNull(), F.lit(0.0)).otherwise(jac_from_wi)
-    ).drop("_wi").withColumn(
-        "f_lev",
-        F.when(
-            F.col("f_jac") >= F.lit(gate),
-            lev_sim(F.substring("n1", 1, m), F.substring("n2", 1, m)),
-        ).otherwise(F.lit(0.0)),
+        ju = f"CAST({s1} + {s2} AS BIGINT) - _wi"
+        jac_from_wi = f"CASE WHEN {ju} <= 0 THEN 1.0D ELSE _wi / CAST({ju} AS DOUBLE) END"
+        out = df.withColumn("_wi", F.expr(f"CASE WHEN {size_bound} >= {gate} THEN {wi_expr} END"))
+    lev = lev_sim_sql(f"substring(n1, 1, {m})", f"substring(n2, 1, {m})")
+    out = (
+        out.withColumn("f_jac", F.expr(f"CASE WHEN _wi IS NULL THEN 0.0D ELSE {jac_from_wi} END"))
+        .drop("_wi")
+        .withColumn("f_lev", F.expr(f"CASE WHEN f_jac >= {gate} THEN {lev} ELSE 0.0D END"))
     )
     weights = {"f_lev": cfg.w_lev, "f_jac": cfg.w_jac}
     if use_cosine:
         out = out.withColumn("f_cos", cosine_sim("e1", "e2"))
         weights["f_cos"] = cfg.w_cos
     total = sum(weights.values())
-    expr = sum((F.col(c) * (w / total) for c, w in weights.items()), F.lit(0.0))
-    return out.withColumn("score", expr)
+    score = " + ".join(["0.0D"] + [f"{c} * {w / total!r}D" for c, w in weights.items()])
+    return out.withColumn("score", F.expr(score))
 
 
 def fused_block_and_score(
@@ -186,25 +184,21 @@ def fused_block_and_score(
     )
 
     key_log = (
-        keyed.filter(F.col("_kn") > cfg.hot_key_threshold)
+        keyed.filter(f"_kn > {cfg.hot_key_threshold}")
         .groupBy("key")
-        .agg(F.max("_kn").alias("n_ids"))
-        .select(
+        .agg(F.expr("max(_kn) AS n_ids"))
+        .selectExpr(
             "key",
             "n_ids",
-            F.when(F.col("n_ids") > cfg.mega_key_threshold, F.lit("chained"))
-            .otherwise(F.lit("plain"))
-            .alias("strategy"),
+            f"CASE WHEN n_ids > {cfg.mega_key_threshold} THEN 'chained' ELSE 'plain' END AS strategy",
         )
     )
 
     short = {"norm": "n", "tokens": "t", "ws": "s", "embedding": "e"}
 
     def side(df, n, extra=()):
-        cols = [F.col(id_col).alias(f"id{n}")] + [
-            F.col(c).alias(f"{short[c]}{n}") for c in feat_cols
-        ]
-        return df.select("key", *cols, *extra)
+        cols = [f"{id_col} AS id{n}"] + [f"{c} AS {short[c]}{n}" for c in feat_cols]
+        return df.selectExpr("key", *cols, *extra)
 
     # Pair-emitting joins are CPU-dense, not byte-dense: a few MB of key rows
     # expand into millions of scored pairs, so AQE's byte-based partition
@@ -221,9 +215,7 @@ def fused_block_and_score(
 
     # _kn = 1 keys (the vast majority under selective blocking) cannot emit a
     # pair — drop them before the join so they never shuffle
-    cold = keyed.filter(
-        (F.col("_kn") >= 2) & (F.col("_kn") <= cfg.mega_key_threshold)
-    )
+    cold = keyed.filter(f"_kn >= 2 AND _kn <= {cfg.mega_key_threshold}")
     mega_tier_live = max_kn is None or max_kn > cfg.mega_key_threshold
 
     # the tier self-joins carry row-proportional sides: hint("merge") pins
@@ -235,7 +227,7 @@ def fused_block_and_score(
         side(cold, 1)
         .repartition(n_pair_parts, "key")
         .join(side(cold, 2).hint("merge"), "key")
-        .filter(F.col("id1") < F.col("id2"))
+        .filter("id1 < id2")
     )
 
     # chaining (sorted-neighborhood, Hernandez-Stolfo): member at chain rank
@@ -257,15 +249,13 @@ def fused_block_and_score(
     pair_feat = cold_pairs
     if mega_tier_live:
         mega = ranked_in_key(
-            keyed.filter(F.col("_kn") > cfg.mega_key_threshold),
+            keyed.filter(f"_kn > {cfg.mega_key_threshold}"),
             ("norm", id_col),
             key_col="key",
             rank_col="_cn",
             total=mega_rows,
         )
-        chain_left = mega.withColumn(
-            "_cn2", F.explode(F.sequence(F.col("_cn") + 1, F.col("_cn") + w))
-        )
+        chain_left = mega.withColumn("_cn2", F.expr(f"explode(sequence(_cn + 1, _cn + {w}))"))
         mega_pairs = (
             side(chain_left, 1, extra=("_cn2",))
             .repartition(n_pair_parts, "key", "_cn2")
@@ -284,11 +274,7 @@ def fused_block_and_score(
     # sides, so only ids swap)
     keep = ["key", "f_lev", "f_jac", "score"] + (["f_cos"] if use_cosine else [])
     return (
-        scored.select(
-            F.least("id1", "id2").alias("id1"),
-            F.greatest("id1", "id2").alias("id2"),
-            *keep,
-        ),
+        scored.selectExpr("least(id1, id2) AS id1", "greatest(id1, id2) AS id2", *keep),
         key_log,
     )
 
@@ -299,5 +285,5 @@ def dedup_scored(scored_by_key: DataFrame) -> DataFrame:
     max() is just a deterministic pick."""
     feature_cols = [c for c in scored_by_key.columns if c not in ("id1", "id2", "key")]
     return scored_by_key.groupBy("id1", "id2").agg(
-        *[F.max(c).alias(c) for c in feature_cols]
+        *[F.expr(f"max({c}) AS {c}") for c in feature_cols]
     )

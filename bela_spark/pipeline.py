@@ -35,8 +35,6 @@ from bela_spark.session import observed_cut, release
 @dataclass
 class LinkageRun:
     records: DataFrame        # rid, content_sha, norm, tokens, (embedding), input cols
-    keys: DataFrame           # rid, key, _kn — pair-eligible key rows only
-                              # (_kn >= 2; a singleton key cannot emit a pair)
     key_drops: DataFrame      # key, n_ids, strategy: every key above
                               # hot_key_threshold and the tier that paired it
                               # ("plain" or "chained") — never silent
@@ -46,8 +44,10 @@ class LinkageRun:
     edges: DataFrame          # id1, id2 accepted
     cc: CCResult
     clusters: DataFrame       # records + cluster_id
-    keys_features: DataFrame = None  # pair-stage input (a localCheckpoint
-                                     # when persist=True)
+    keys_features: DataFrame  # rid, key, _kn, features: the pair-stage
+                              # input, pair-eligible key rows only (_kn >= 2;
+                              # a singleton key cannot emit a pair); a
+                              # localCheckpoint when persist=True
     # the caches and checkpoints the run still holds (records and
     # keys_features cuts, the scored cache); release() frees them
     held: list[DataFrame] = field(default_factory=list, repr=False)
@@ -99,23 +99,15 @@ def pair_stage_features(
     counts once toward df, as it should). Shared by run_linkage and the
     scaling bench so both always measure the same feature kernel."""
 
-    def _slim(c):
-        if c == "tokens":
-            # outer array_distinct: a 2^31-bucket hash collision can merge two
-            # distinct tokens, and the O(1) size-ratio gate in scoring is only
-            # exact over genuine sets — dedup AFTER hashing keeps it airtight
-            return F.array_distinct(
-                F.transform(
-                    F.array_distinct("tokens"),
-                    lambda t: F.pmod(F.xxhash64(t), F.lit(2**31)).cast("int"),
-                )
-            ).alias("tokens")
-        if c == "norm":
-            return F.substring("norm", 1, cfg.lev_max_chars).alias("norm")
-        return F.col(c)
-
-    feature_cols = ["norm", "tokens"] + (["embedding"] if use_embeddings else [])
-    feats = base.select("rid", *[_slim(c) for c in feature_cols])
+    # outer array_distinct: a 2^31-bucket hash collision can merge two
+    # distinct tokens, and the O(1) size-ratio gate in scoring is only exact
+    # over genuine sets — dedup AFTER hashing keeps it airtight
+    slim = [
+        f"substring(norm, 1, {cfg.lev_max_chars}) AS norm",
+        "array_distinct(transform(array_distinct(tokens), "
+        "x -> CAST(pmod(xxhash64(x), 2147483648L) AS INT))) AS tokens",
+    ] + (["embedding"] if use_embeddings else [])
+    feats = base.selectExpr("rid", *slim)
     if cfg.idf_weighting:
         # packed form: the hashed int tokens are already < 2^31, so each
         # rides with its global weight in one long — the scoring stage then
@@ -170,8 +162,8 @@ def run_linkage(
             # the collapse reads records twice (reps aggregate + join probe)
             records = records.persist()
         pre_collapse = records
-        ck = F.coalesce(F.md5("norm"), F.lit("\0"))
-        reps = records.groupBy(ck.alias("_ck")).agg(F.min("rid").alias("rep"))
+        ck = F.expr(r"coalesce(md5(norm), '\0')")
+        reps = records.groupBy(ck.alias("_ck")).agg(F.expr("min(rid) AS rep"))
         records = (
             records.withColumn("_ck", ck)
             .join(reps.hint("shuffle_hash"), "_ck")
@@ -183,7 +175,7 @@ def run_linkage(
         held.append(records)
         if collapse_exact:
             pre_collapse.unpersist()
-    base = records.filter(F.col("rid") == F.col("rep")) if collapse_exact else records
+    base = records.filter("rid = rep") if collapse_exact else records
 
     # dedup=False: (rid, key) is unique by construction (namespaced families,
     # band index in the key string) — see blocking_keys; the distinct this
@@ -221,15 +213,12 @@ def run_linkage(
         # tier can hold a row) and the chained tier's row total (its rank
         # boundaries) at no job of its own; above the bound the pinned
         # shuffle-hash join runs.
-        kn = F.col("_kn")
         multi, (n_multi, max_kn, mega_rows) = observed_cut(
-            keys_slim.groupBy("key")
-            .agg(F.count("*").alias("_kn"))
-            .filter(kn >= 2),
-            n_multi=F.count("*"),
-            max_kn=F.coalesce(F.max(kn), F.lit(0)),
-            mega_rows=F.coalesce(
-                F.sum(F.when(kn > cfg.mega_key_threshold, kn)), F.lit(0)
+            keys_slim.groupBy("key").agg(F.expr("count(*) AS _kn")).filter("_kn >= 2"),
+            n_multi=F.expr("count(*)"),
+            max_kn=F.expr("coalesce(max(_kn), 0)"),
+            mega_rows=F.expr(
+                f"coalesce(sum(CASE WHEN _kn > {cfg.mega_key_threshold} THEN _kn END), 0)"
             ),
         )
         cnt = multi.withColumnRenamed("key", "_kwc_key")
@@ -237,9 +226,7 @@ def run_linkage(
             cnt = F.broadcast(cnt)
         else:
             cnt = cnt.hint("shuffle_hash")
-        keys = keys_slim.join(
-            cnt, F.col("key").eqNullSafe(F.col("_kwc_key"))
-        ).drop("_kwc_key")
+        keys = keys_slim.join(cnt, F.expr("key <=> _kwc_key")).drop("_kwc_key")
     else:
         keys = keyed_with_counts(keys_slim, min_count=2)
     # one feature row PER RECORD: pin the join strategy so AQE can never
@@ -268,7 +255,7 @@ def run_linkage(
         max_kn=max_kn,
         mega_rows=mega_rows,
     )
-    pairs = scored_by_key.select("id1", "id2", "key")
+    pairs = scored_by_key.selectExpr("id1", "id2", "key")
 
     scored = dedup_scored(scored_by_key)
     if persist:
@@ -297,14 +284,14 @@ def run_linkage(
         # pinned sort-merge, never a size-estimated broadcast
         clusters = (
             records.join(rep_assign.hint("merge"), "rep", "left")
-            .withColumn("cluster_id", F.coalesce("component", "rep"))
+            .withColumn("cluster_id", F.expr("coalesce(component, rep)"))
             .drop("component", "rep")
         )
     else:
         clusters = assign_clusters(records, cc.assignments)
     return LinkageRun(
-        records, keys, drops, pairs, scored_by_key, scored, edges, cc, clusters,
-        keys_features=keys_with_features, held=held,
+        records, drops, pairs, scored_by_key, scored, edges, cc, clusters,
+        keys_with_features, held=held,
     )
 
 
@@ -312,7 +299,7 @@ def assign_clusters(records: DataFrame, assignments: DataFrame) -> DataFrame:
     """C6: join components back; singletons become their own cluster."""
     # row-proportional right side — pinned sort-merge (see run_linkage)
     return records.join(assignments.hint("merge"), "rid", "left").withColumn(
-        "cluster_id", F.coalesce("component", "rid")
+        "cluster_id", F.expr("coalesce(component, rid)")
     ).drop("component")
 
 

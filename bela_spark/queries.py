@@ -20,7 +20,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window as W, functions 
 
 from bela_spark.config import LinkageConfig
 from bela_spark.functions.hashing import band_keys, minhash_signatures, minhash_wide, simhash_fp
-from bela_spark.functions.text import normalized, shingles_of, tokens_of
+from bela_spark.functions.text import normalized, normalized_sql, shingles_of, tokens_of
 from bela_spark.functions.vectors import embed_text
 from bela_spark.operators import el as el_ops
 from bela_spark.operators import textops
@@ -848,13 +848,13 @@ def el_boe_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokens of the first half of the text."""
     d = _docs(spark, sf_dir)
     gold = d.select(
-        "doc_id", F.explode(F.array_distinct(tokens_of(normalized("text")))).alias("ent_id")
+        "doc_id", F.explode(F.array_distinct(tokens_of(normalized_sql("text")))).alias("ent_id")
     )
     pred = d.select(
         "doc_id",
         F.explode(
             F.array_distinct(
-                tokens_of(normalized(F.substring("text", 1, F.floor(F.length("text") / 2).cast("int"))))
+                tokens_of(normalized_sql("substring(text, 1, CAST(floor(length(text) / 2) AS INT))"))
             )
         ).alias("ent_id"),
     )

@@ -138,4 +138,12 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # release() frees localCheckpoint blocks on purpose, and the RDD warns
+    # on each ("locally checkpointed, its lineage has been truncated") —
+    # every linkage pass and micro-batch would log several. Only that
+    # logger is raised to ERROR; every other warning stays.
+    jvm = spark.sparkContext._jvm
+    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        "org.apache.spark.rdd.MapPartitionsRDD", jvm.org.apache.logging.log4j.Level.ERROR
+    )
     return spark

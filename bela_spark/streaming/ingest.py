@@ -103,7 +103,7 @@ class IncrementalLinkage:
         spark = batch_df.sparkSession
         cfg = self.cfg
 
-        new_records = prepare_records(batch_df, cfg).select(
+        new_records = prepare_records(batch_df, cfg).selectExpr(
             "rid", "repo", "path", "commit", "lang", "content_sha", "norm", "tokens"
         )
         rec_schema = (
@@ -117,8 +117,6 @@ class IncrementalLinkage:
         # keeps an arbitrary one). localCheckpoint decouples the plan from
         # the state files so the overwrite of records_dir below can't
         # invalidate lazy readers.
-        from pyspark.sql import Window as W
-
         # full tie-break: the same rid at the same priority (a replayed batch
         # file carrying duplicate rows for one rid with differing content)
         # must resolve deterministically — content_sha is the only column
@@ -126,31 +124,32 @@ class IncrementalLinkage:
         # _old_sha, the stored content of the rid (stored rids are unique),
         # rides along so the content-change test below is a filter of the
         # cut, not a join of its own
-        by_rid = W.partitionBy("rid")
         resolved = (
             new_records.withColumn("_prio", F.lit(0))
             .unionByName(existing.withColumn("_prio", F.lit(1)))
-            .withColumn("_rn", F.row_number().over(by_rid.orderBy("_prio", "content_sha")))
+            .withColumn(
+                "_rn", F.expr("row_number() OVER (PARTITION BY rid ORDER BY _prio, content_sha)")
+            )
             .withColumn(
                 "_old_sha",
-                F.max(F.when(F.col("_prio") == 1, F.col("content_sha"))).over(by_rid),
+                F.expr("max(CASE WHEN _prio = 1 THEN content_sha END) OVER (PARTITION BY rid)"),
             )
-            .filter(F.col("_rn") == 1)
+            .filter("_rn = 1")
             .drop("_rn")
             .localCheckpoint()
         )
         all_records = resolved.drop("_prio", "_old_sha")
         # the batch's rows after resolution, read from the cut above rather
         # than by re-running the batch's normalize stage
-        batch_rows = resolved.filter(F.col("_prio") == 0)
-        new_ids = batch_rows.select("rid")
+        batch_rows = resolved.filter("_prio = 0")
+        new_ids = batch_rows.selectExpr("rid")
 
         # rids whose content CHANGED in this batch: every stored edge incident
         # to them was derived from the old content and is now invalid — a
         # cluster must never outlive the evidence it was built on
         changed = batch_rows.filter(
-            F.col("_old_sha").isNotNull() & (F.col("content_sha") != F.col("_old_sha"))
-        ).select("rid")
+            "_old_sha IS NOT NULL AND content_sha != _old_sha"
+        ).selectExpr("rid")
 
         # stored keys stand for every rid the batch did not re-send (its
         # content is unchanged) when they were built under this config's key
@@ -164,17 +163,17 @@ class IncrementalLinkage:
             self._existing(
                 spark, self.keys_dir, "rid string, key string, key_params string"
             )
-            .filter(F.col("key_params") == params)
+            .filter(f"key_params = '{params}'")
             .join(new_ids, "rid", "left_anti")
-            .select("rid", "key")
+            .selectExpr("rid", "key")
         )
-        unkeyed = all_records.join(stored_keys.select("rid"), "rid", "left_anti")
+        unkeyed = all_records.join(stored_keys.selectExpr("rid"), "rid", "left_anti")
         keys = stored_keys.unionByName(
             blocking_keys(unkeyed, cfg, dedup=False)
         ).localCheckpoint()
         # bound work to keys touched by this batch: only keys containing a new
         # record can produce new pairs
-        touched = keys.join(new_ids, "rid", "left_semi").select("key").distinct()
+        touched = keys.join(new_ids, "rid", "left_semi").selectExpr("key").distinct()
         keys_touched = keys.join(F.broadcast(touched), "key")
         # slim the pair-stage payload before it is multiplied by the key
         # fan-out (guide §2.3): the scorer only ever reads the first
@@ -186,10 +185,10 @@ class IncrementalLinkage:
         # range-boundary jobs) is planned for a batch whose touched keys all
         # pair in the plain join
         kwf = keys_touched.join(
-            all_records.select(
+            all_records.selectExpr(
                 "rid",
-                F.substring("norm", 1, cfg.lev_max_chars).alias("norm"),
-                F.array_distinct("tokens").alias("tokens"),
+                f"substring(norm, 1, {cfg.lev_max_chars}) AS norm",
+                "array_distinct(tokens) AS tokens",
             ),
             "rid",
         )
@@ -212,17 +211,17 @@ class IncrementalLinkage:
         edges = (
             stored_edges.withColumn("_new", F.lit(False))
             .unionByName(
-                scored_by_key.filter(F.col("score") >= cfg.score_threshold)
-                .select("id1", "id2")
+                scored_by_key.filter(f"score >= {cfg.score_threshold!r}D")
+                .selectExpr("id1", "id2")
                 .withColumn("_new", F.lit(True))
             )
             .groupBy("id1", "id2")
-            .agg(F.max("_new").alias("_new"))
+            .agg(F.expr("max(_new) AS _new"))
             .localCheckpoint()
         )
-        all_edges = edges.select("id1", "id2")
-        new_edges = edges.filter("_new").select("id1", "id2")
-        old_edges = edges.filter(~F.col("_new")).select("id1", "id2")
+        all_edges = edges.selectExpr("id1", "id2")
+        new_edges = edges.filter("_new").selectExpr("id1", "id2")
+        old_edges = edges.filter("NOT _new").selectExpr("id1", "id2")
 
         if self._stored(self.edges_dir) and not self._stored(self.clusters_dir):
             # an earlier batch stopped after writing edges/ and before
@@ -239,9 +238,9 @@ class IncrementalLinkage:
                 new_edges, old_edges, old_clusters, dirty_rids=changed
             )
         clusters = (
-            all_records.select("rid")
+            all_records.selectExpr("rid")
             .join(assignments, "rid", "left")
-            .withColumn("cluster_id", F.coalesce("component", "rid"))
+            .withColumn("cluster_id", F.expr("coalesce(component, rid)"))
             .drop("component")
         )
 
@@ -281,20 +280,20 @@ class IncrementalLinkage:
         """
         cfg = self.cfg
         ep = (
-            new_edges.select(F.col("id1").alias("rid"))
-            .unionByName(new_edges.select(F.col("id2").alias("rid")))
+            new_edges.selectExpr("id1 AS rid")
+            .unionByName(new_edges.selectExpr("id2 AS rid"))
             .distinct()
         )
         if dirty_rids is not None:
             # content-changed rids lost edges: their old components may SPLIT,
             # so they are touched even with no new edge incident to them
-            ep = ep.unionByName(dirty_rids.select("rid")).distinct()
+            ep = ep.unionByName(dirty_rids.selectExpr("rid")).distinct()
         touched_cl = (
-            old_clusters.join(ep, "rid", "left_semi").select("cluster_id").distinct()
+            old_clusters.join(ep, "rid", "left_semi").selectExpr("cluster_id").distinct()
         )
         touched_rids = old_clusters.join(
             F.broadcast(touched_cl), "cluster_id", "left_semi"
-        ).select(F.col("rid").alias("id1"))
+        ).selectExpr("rid AS id1")
         sub_edges = old_edges.join(touched_rids, "id1", "left_semi").unionByName(
             new_edges
         )
@@ -303,7 +302,7 @@ class IncrementalLinkage:
         # harmless: component == rid is what coalesce(rid) would produce)
         untouched = old_clusters.join(
             F.broadcast(touched_cl), "cluster_id", "left_anti"
-        ).select("rid", F.col("cluster_id").alias("component"))
+        ).selectExpr("rid", "cluster_id AS component")
         return cc.assignments.unionByName(untouched)
 
     def start(

@@ -3,16 +3,10 @@
 import pytest
 from pyspark.sql import functions as F
 
-from bela_spark.config import LinkageConfig
+from bela_spark.functions.hashing import simhash_fp
 from bela_spark.functions.text import normalized, tokens_of
 from bela_spark.operators.ann import brute_force_topk, lsh_topk, mrr, recall_at_k
-from bela_spark.operators.dedup import (
-    exact_duplicates,
-    minhash_lsh_pairs,
-    ngram_jaccard_pairs,
-    simhash_fingerprints,
-    simhash_near_pairs,
-)
+from bela_spark.operators.dedup import simhash_near_pairs
 
 
 def _records(spark, rows):
@@ -22,33 +16,14 @@ def _records(spark, rows):
     )
 
 
-def test_exact_duplicates(spark):
-    df = spark.createDataFrame(
-        [("a", "same text"), ("b", "same text"), ("c", "other")], ["rid", "content"]
-    )
-    out = {r["content_sha"]: r for r in exact_duplicates(df).collect()}
-    assert len(out) == 2
-    dup = [r for r in out.values() if r["n_dups"] == 2][0]
-    assert dup["keeper"] == "a"
-
-
 TEXT = "the quick brown fox jumps over the lazy dog and runs far away today"
-
-
-def test_minhash_lsh_finds_near_dups(spark):
-    near = TEXT.replace("lazy", "sleepy")
-    far = "completely different content about spark shuffles and partitions here"
-    recs = _records(spark, [("a", TEXT), ("b", near), ("c", far)])
-    pairs = {(r["id1"], r["id2"]) for r in minhash_lsh_pairs(recs, LinkageConfig()).collect()}
-    assert ("a", "b") in pairs
-    assert ("a", "c") not in pairs and ("b", "c") not in pairs
 
 
 def test_simhash_hamming_small_for_near_dups(spark):
     near = TEXT + " extra"
     far = "totally other words entirely unrelated list of tokens goes right here"
     recs = _records(spark, [("a", TEXT), ("b", near), ("c", far)])
-    fp = simhash_fingerprints(recs)
+    fp = recs.select("rid", simhash_fp("tokens").alias("simhash"))
     vals = {r["rid"]: r["simhash"] for r in fp.collect()}
     ham = lambda x, y: bin(x ^ y).count("1")
     assert ham(vals["a"], vals["b"]) < ham(vals["a"], vals["c"])
@@ -57,7 +32,7 @@ def test_simhash_hamming_small_for_near_dups(spark):
 
 def test_simhash_near_pairs_blocked_join(spark):
     recs = _records(spark, [("a", TEXT), ("b", TEXT), ("c", "unrelated thing")])
-    fp = simhash_fingerprints(recs)
+    fp = recs.select("rid", simhash_fp("tokens").alias("simhash"))
     out = {(r["id1"], r["id2"]): r["hamming"] for r in simhash_near_pairs(fp, 3).collect()}
     assert out == {("a", "b"): 0}
 
@@ -146,16 +121,6 @@ def test_simhash_block_cap_and_drop_log(spark):
     drops = simhash_block_drops(fp, max_hamming=6, bits=63, block_cap=3).collect()
     assert len(drops) == 7
     assert all(r["n_ids"] == 5 and r["n_dropped"] == 2 for r in drops)
-
-
-def test_ngram_jaccard_exact_value(spark):
-    # identical shingle sets collide on every LSH band deterministically;
-    # the near-miss value math itself is pinned by the DuckDB oracle
-    # (dedup_ngram_jaccard in scripts/check_oracles.py)
-    recs = _records(spark, [("a", "w x y z"), ("b", "w x y z"), ("c", TEXT)])
-    out = ngram_jaccard_pairs(recs, LinkageConfig(), min_jaccard=0.1).collect()
-    assert {(r["id1"], r["id2"]) for r in out} == {("a", "b")}
-    assert out[0]["jaccard"] == pytest.approx(1.0)
 
 
 def _emb(spark):

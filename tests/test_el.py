@@ -10,7 +10,6 @@ from bela_spark.operators.el import (
     merge_overlapping_spans,
     micro_prf1,
     span_match,
-    threshold_grid,
     topk_spans,
 )
 
@@ -112,8 +111,3 @@ def test_bag_of_entities_f1(spark):
     # sets: pred {E1,E2}, gold {E1,E3} -> tp=1 fp=1 fn=1
     assert (row["tp"], row["fp"], row["fn"]) == (1, 1, 1)
 
-
-def test_threshold_grid(spark):
-    scored = spark.createDataFrame([(0.3,), (0.55,), (0.8,)], ["score"])
-    out = {r["threshold"]: r["n_edges"] for r in threshold_grid(scored, [0.5, 0.7]).collect()}
-    assert out == {0.5: 2, 0.7: 1}

@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from bela_spark.functions.strings import jaro_winkler, lev_sim
-from bela_spark.functions.text import normalized, shingles_of, tokens_of
+from bela_spark.functions.text import normalized, normalized_sql, shingles_of, tokens_of
 from bela_spark.functions.vectors import cosine_sim, dot_product, embed_text
 
 
@@ -17,7 +17,7 @@ def test_normalized_and_tokens(spark):
         [("Def Foo(a, b):\n  return a+b*3",), ("",), ("  A  ",)], ["content"]
     )
     out = df.select(
-        normalized("content").alias("n"), tokens_of(normalized("content")).alias("t")
+        normalized("content").alias("n"), tokens_of(normalized_sql("content")).alias("t")
     ).collect()
     assert out[0]["n"] == "def foo a b return a b 3"
     assert out[0]["t"] == ["def", "foo", "a", "b", "return", "a", "b", "3"]

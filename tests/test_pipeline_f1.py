@@ -227,3 +227,26 @@ def test_counts_gate_reads_its_numbers_off_one_cut(spark, fixture_df, monkeypatc
     )
     run.release()
     assert jobs <= 9
+
+
+def test_every_run_frame_counts_before_release(spark):
+    """Every DataFrame a LinkageRun hands out reads until release(): none may
+    sit on a cut the pass has already freed (a read of one fails loud with
+    CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND)."""
+    from dataclasses import fields
+
+    from pyspark.sql import DataFrame
+
+    run = run_linkage(synth_repo_files(spark, 400), LinkageConfig.at_scale(), collapse_exact=True)
+    try:
+        frames = {
+            f.name: getattr(run, f.name)
+            for f in fields(run)
+            if isinstance(getattr(run, f.name), DataFrame)
+        }
+        frames["cc.assignments"] = run.cc.assignments
+        counts = {name: df.count() for name, df in frames.items()}
+    finally:
+        run.release()
+    assert len(frames) == 9, sorted(frames)
+    assert counts["records"] == counts["clusters"] == 400
